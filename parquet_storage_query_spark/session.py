@@ -60,6 +60,57 @@ def _enable_py4j_nodelay() -> None:
 
 _enable_py4j_nodelay()
 
+
+def _enable_stat_keyed_zip_invalidation() -> None:
+    """Re-read a zip archive's directory on `importlib.invalidate_caches()`
+    only when the archive changed. Before 3.12, every call makes each
+    `zipimporter` in `sys.path_importer_cache` re-parse its archive's
+    whole central directory, and PySpark's worker calls it at the start
+    of EVERY Python task (`worker_util.setup_spark_files`). A worker has
+    ~12 importers over pyspark.zip (1,328 entries) and 2 over the
+    spark-core jar (5,359 entries), so each task paid 150-250 ms of CPU
+    re-reading archives that never change. Wrapped, an archive is re-read
+    only when its (st_mtime_ns, st_size) differs from what this process
+    last read; otherwise the importer is rebound to the shared cached
+    directory. A failed `stat` falls back to the original method.
+    Every pandas UDF whose function lives in this package imports it when
+    the worker unpickles the task, so from then on each reused worker
+    reads each archive once more and afterwards pays one `stat` per
+    importer per task instead. CPython 3.12 made this invalidation
+    lazy, so there it is left alone. Idempotent."""
+    import sys
+    import zipimport
+
+    if sys.version_info >= (3, 12):
+        return
+    orig = zipimport.zipimporter.invalidate_caches
+    if getattr(orig, "_stat_keyed", False):
+        return
+    read_as_of: dict[str, tuple[int, int]] = {}
+
+    def invalidate_caches(self):  # noqa: ANN001
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            read_as_of.pop(self.archive, None)
+            orig(self)
+            return
+        key = (st.st_mtime_ns, st.st_size)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and read_as_of.get(self.archive) == key:
+            self._files = files
+            return
+        # stat before the read: a write racing the read changes the key,
+        # so the next call reads again
+        orig(self)
+        read_as_of[self.archive] = key
+
+    invalidate_caches._stat_keyed = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_enable_stat_keyed_zip_invalidation()
+
 # local[32] single-JVM test box; a real deployment overrides master/memory
 # via spark-submit and these become per-executor settings.
 _DEFAULTS = {

@@ -280,17 +280,20 @@ def _state_partitions(
       keys, dedup horizons), one partition per ~32 MB of backlog with a
       floor of 8 (parallelism for small replays) and a cap of 4x the
       session parallelism (bounds scheduling; a real deployment raises
-      the env override below instead).
+      the env override below instead). The cap wins over the floor, so
+      the bound holds below 2 cores too.
     `SPARK_GRAFT_STREAM_STATE_PARTITIONS` overrides both for cluster
-    deployments."""
+    deployments. The session default is read under the lock that
+    `_run_to_memory` holds while a sized start has it transiently set."""
     env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
     if env:
         return max(1, int(env))
-    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with _STATE_PARTITION_LOCK:
+        default = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if keys is not None:
         return max(1, min(default, -(-keys // 8)))
     if backlog_bytes is not None:
-        return max(8, min(4 * default, -(-backlog_bytes // (32 << 20))))
+        return min(4 * default, max(8, -(-backlog_bytes // (32 << 20))))
     return default
 
 
@@ -313,27 +316,24 @@ def _run_to_memory(
     df: DataFrame, name: str, mode: str, partitions: int | None = None
 ) -> DataFrame:
     spark = df.sparkSession
-    if partitions is None:
-        q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-    else:
-        # streaming queries clone the session conf synchronously inside
-        # start() (verified: numShufflePartitions in progress == the value
-        # set here even after an immediate reset), so a set/start/reset
-        # under a lock scopes the partition count to THIS query. The lock
-        # only serializes concurrent streaming starts in this module; a
-        # batch plan observing the transient value would at worst get a
-        # different (AQE-coalesced anyway) exchange width, never a
-        # different result.
-        with _STATE_PARTITION_LOCK:
+    writer = df.writeStream.outputMode(mode).format("memory").queryName(name)
+    # streaming queries clone the session conf synchronously inside
+    # start() (verified: numShufflePartitions in progress == the value
+    # set here even after an immediate reset), so a set/start/reset
+    # under a lock scopes the partition count to THIS query. Unsized
+    # starts take the lock too, without touching the conf, so they never
+    # clone another query's transient value. The lock only serializes
+    # streaming starts in this module; a batch plan observing the
+    # transient value would at worst get a different (AQE-coalesced
+    # anyway) exchange width, never a different result.
+    with _STATE_PARTITION_LOCK:
+        if partitions is None:
+            q = writer.start()
+        else:
             prev = spark.conf.get("spark.sql.shuffle.partitions")
             spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
             try:
-                q = (
-                    df.writeStream.outputMode(mode)
-                    .format("memory")
-                    .queryName(name)
-                    .start()
-                )
+                q = writer.start()
             finally:
                 spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:

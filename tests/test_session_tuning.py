@@ -6,7 +6,8 @@
    silently revert it.
 2. The stream state-partition sizing helper must stay data-derived (key
    domain / backlog bytes), honor the env override, and actually reach the
-   started streaming query's cloned conf.
+   started streaming query's cloned conf, without leaking into a stream
+   started concurrently on another thread.
 """
 
 from __future__ import annotations
@@ -108,3 +109,105 @@ def test_local_dir_bytes(tmp_path):
     (sub / "b").write_bytes(b"y" * 50)
     assert _local_dir_bytes(str(tmp_path)) == 150
     assert _local_dir_bytes(str(tmp_path / "a")) == 100
+
+
+class _ConfStub:
+    """Just enough of a SparkSession for `_state_partitions`."""
+
+    def __init__(self, shuffle_partitions: int):
+        self.conf = {"spark.sql.shuffle.partitions": str(shuffle_partitions)}
+
+
+def test_state_partitions_cap_wins_over_floor(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+    # at parallelism 1 the 4x cap (4) bounds even the floor of 8
+    assert _state_partitions(_ConfStub(1), backlog_bytes=1 << 20) == 4
+    assert _state_partitions(_ConfStub(1), backlog_bytes=64 * (32 << 20)) == 4
+    # at 4 cores a small replay still gets the floor of 8
+    assert _state_partitions(_ConfStub(4), backlog_bytes=1 << 20) == 8
+    assert _state_partitions(_ConfStub(4), backlog_bytes=64 * (32 << 20)) == 16
+
+
+def test_unsized_start_never_clones_a_transient_partition_count(
+    spark, tmp_path, monkeypatch
+):
+    """A sized start holds `spark.sql.shuffle.partitions` at its own value
+    for the length of its start(). An unsized start on another thread, and
+    a `_state_partitions` read, must both wait for the restore instead of
+    picking up the transient value."""
+    import json
+    import threading
+
+    import pyspark.sql.streaming.query as _sq
+    from pyspark.sql import functions as F
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert default > 1
+    src = str(tmp_path / "src")
+    spark.range(40).write.parquet(src)
+
+    def counts():
+        return (
+            spark.readStream.schema("id long")
+            .parquet(src)
+            .groupBy((F.col("id") % 5).alias("k"))
+            .count()
+        )
+
+    sized_df, unsized_df = counts(), counts()
+    parts: dict[str, int] = {}
+    orig_stop = _sq.StreamingQuery.stop
+
+    def capturing_stop(self):
+        for p in self.recentProgress:
+            d = p if isinstance(p, dict) else json.loads(p.json)
+            for so in d.get("stateOperators", []):
+                parts[self.name] = so.get("numShufflePartitions")
+        return orig_stop(self)
+
+    in_sized_start = threading.Event()
+    orig_start = DataStreamWriter.start
+
+    def slow_sized_start(self, *a, **kw):
+        if threading.current_thread().name == "sized":
+            # hold the transient value long enough for the other thread
+            # to reach its own start
+            in_sized_start.set()
+            threading.Event().wait(1.5)
+        return orig_start(self, *a, **kw)
+
+    monkeypatch.setattr(_sq.StreamingQuery, "stop", capturing_stop)
+    monkeypatch.setattr(DataStreamWriter, "start", slow_sized_start)
+    read: dict[str, int] = {}
+    errors: list[BaseException] = []
+
+    def run(fn):
+        def body():
+            try:
+                fn()
+            except BaseException as e:  # noqa: BLE001
+                errors.append(e)
+
+        return body
+
+    def unsized():
+        assert in_sized_start.wait(30)
+        read["keys"] = _state_partitions(spark, keys=8 * default)
+        _run_to_memory(unsized_df, "t_race_unsized_out", "update")
+
+    sized = threading.Thread(
+        target=run(lambda: _run_to_memory(sized_df, "t_race_sized_out", "update", partitions=1)),
+        name="sized",
+    )
+    other = threading.Thread(target=run(unsized), name="unsized")
+    sized.start()
+    other.start()
+    sized.join(120)
+    other.join(120)
+    assert not sized.is_alive() and not other.is_alive()
+    assert not errors, errors
+    assert parts == {"t_race_sized_out": 1, "t_race_unsized_out": default}
+    assert read["keys"] == default
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(default)

@@ -15,14 +15,23 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
+def split_args(argv: list[str]) -> tuple[list[str], dict[str, str]]:
+    """Positional arguments, and the `k=v` value after each `--conf`."""
+    args: list[str] = []
+    confs: dict[str, str] = {}
+    it = iter(argv)
+    for a in it:
+        if a == "--conf":
+            k, _, v = next(it, "").partition("=")
+            if k:
+                confs[k] = v
+        else:
+            args.append(a)
+    return args, confs
+
+
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--conf")]
-    confs = {}
-    argv = sys.argv[1:]
-    for i, a in enumerate(argv):
-        if a == "--conf" and i + 1 < len(argv):
-            k, _, v = argv[i + 1].partition("=")
-            confs[k] = v
+    args, confs = split_args(sys.argv[1:])
     sf_dir = args[0]
     names = args[1:]
 
