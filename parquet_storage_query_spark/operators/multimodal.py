@@ -25,7 +25,7 @@ vectorized pandas — the pattern for real decode/resize/frame-sample jobs.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -753,27 +753,42 @@ def _fixture_shards(spark: SparkSession, sf_dir: str) -> int:
     return max(8, min(64, n // 1500))
 
 
-def _fixture_pixels(doc_id: int) -> tuple[int, int, bytes]:
-    import numpy as np
+# The binary fixture table: artifact tag -> (version, binary column
+# names, per-document encoder). A committed artifact is found again by its
+# tag and the digest of (corpus, version) alone, so the version pins the
+# encoder's BYTES: an encoder change that keeps its version serves the old
+# bytes wherever the old artifact is committed, and new bytes elsewhere.
+_FIXTURES: dict[str, tuple[str, tuple[str, ...], Callable]] = {}
 
-    w = PNG_BASE + doc_id % PNG_W_MOD
-    h = PNG_BASE + doc_id % PNG_H_MOD
-    v = (doc_id * PNG_A + PNG_B * np.arange(w * h * 3, dtype=np.int64)) % 256
-    return w, h, v.astype(np.uint8).tobytes()
+
+def _fixture(tag: str, version: str, *cols: str) -> Callable:
+    """Register the decorated `encode(doc_id)` as fixture table `tag`;
+    it returns one binary value per column in `cols` (a tuple when there
+    are several)."""
+
+    def register(encode: Callable) -> Callable:
+        _FIXTURES[tag] = (version, cols, encode)
+        return encode
+
+    return register
 
 
-def ensure_png_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per corpus version) the PNG fixture table — one REAL
-    png binary per document id — through the committed-artifact protocol.
-    The binary-column parquet layout is exactly how a multimodal corpus
-    ships image payloads."""
+def _binary_fixture(spark: SparkSession, sf_dir: str, tag: str) -> str:
+    """Write (once per corpus version) fixture table `tag` — one REAL
+    binary payload per document id in each of its columns — through the
+    committed-artifact protocol, and return its path. The binary-column
+    parquet layout is exactly how a multimodal corpus ships image, audio
+    and video payloads."""
     from ..cache import ensure_artifact
     from ..catalog import table_path
 
+    version, cols, encode = _FIXTURES[tag]
+
     def build(dest: str) -> None:
         # corpus-scaled shards (see _fixture_shards): the 30x probe caught
-        # the unsharded fixture (1-2 files from the single-file documents
-        # scan) pinning every mm_image_* decode to 1-2 tasks — decode
+        # unsharded fixtures (1-2 files from the single-file documents
+        # scan) pinning every decode to 1-2 tasks (a 1-file JPEG fixture
+        # decoded on 1 task was the whole sf1 wall time) — decode
         # parallelism must grow with the corpus, which at 100 TB the scan
         # provides for free
         ids = (
@@ -784,19 +799,50 @@ def ensure_png_fixture(spark: SparkSession, sf_dir: str) -> str:
 
         def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                pngs = []
-                for did in pdf["doc_id"]:
-                    w, h, px = _fixture_pixels(int(did))
-                    pngs.append(encode_png(w, h, 3, px))
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "png": pngs})
+                vals = [encode(int(did)) for did in pdf["doc_id"]]
+                if len(cols) == 1:
+                    vals = [(v,) for v in vals]
+                yield pd.DataFrame(
+                    {"doc_id": pdf["doc_id"]}
+                    | {c: [v[i] for v in vals] for i, c in enumerate(cols)}
+                )
 
-        ids.mapInPandas(gen, schema="doc_id long, png binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
+        schema = ", ".join(["doc_id long"] + [f"{c} binary" for c in cols])
+        ids.mapInPandas(gen, schema=schema).write.mode("overwrite").parquet(dest)
 
     return ensure_artifact(
-        spark, sf_dir, "png_fixture", "v3", [table_path(sf_dir, "documents")], build
+        spark, sf_dir, tag, version, [table_path(sf_dir, "documents")], build
     )
+
+
+def _per_row(
+    df: DataFrame, cols: list[str], fn: Callable[..., Iterator[dict]], schema: str
+) -> DataFrame:
+    """Run `fn(*values of cols)` on every row of `df` inside Arrow-batched
+    mapInPandas. `fn` yields the output rows (dicts keyed by the `schema`
+    column names) of its input row: one for a per-payload decode, several
+    for a per-frame or per-shot explode. Each Arrow batch becomes one
+    pandas frame; every per-row decode query shares this batch loop, so
+    it is the one place to time their Python side of the Arrow
+    boundary."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [out for vals in zip(*(pdf[c] for c in cols)) for out in fn(*vals)]
+            )
+
+    return df.mapInPandas(kernel, schema=schema)
+
+
+@_fixture("png_fixture", "v3", "png")
+def _png_fixture(doc_id: int) -> bytes:
+    import numpy as np
+
+    w = PNG_BASE + doc_id % PNG_W_MOD
+    h = PNG_BASE + doc_id % PNG_H_MOD
+    v = (doc_id * PNG_A + PNG_B * np.arange(w * h * 3, dtype=np.int64)) % 256
+    return encode_png(w, h, 3, v.astype(np.uint8).tobytes())
 
 
 @query(
@@ -835,30 +881,24 @@ def mm_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     one vectorized decode call, partitions scale with input splits."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_png_fixture(spark, sf_dir))
+    def stats(did, png):
+        w, h, ch, px = decode_image(bytes(png))
+        arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        yield {
+            "doc_id": did,
+            "width": w,
+            "height": h,
+            "n_pixels": w * h,
+            "sum_r": int(arr[0::ch].sum()),
+            "sum_g": int(arr[1::ch].sum()),
+            "sum_b": int(arr[2::ch].sum()),
+        }
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, png in zip(pdf["doc_id"], pdf["png"]):
-                w, h, ch, px = decode_image(bytes(png))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "n_pixels": w * h,
-                        "sum_r": int(arr[0::ch].sum()),
-                        "sum_g": int(arr[1::ch].sum()),
-                        "sum_b": int(arr[2::ch].sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "png_fixture")),
+        ["doc_id", "png"],
         stats,
-        schema="doc_id long, width int, height int, n_pixels long, "
+        "doc_id long, width int, height int, n_pixels long, "
         "sum_r long, sum_g long, sum_b long",
     )
 
@@ -872,44 +912,18 @@ BMP_H_BASE, BMP_H_MOD = 6, 7
 BMP_A, BMP_B = 17, 13  # pixel byte k of doc d: (d*BMP_A + k*BMP_B) % 256
 
 
-def ensure_bmp_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per corpus version) the BMP fixture table — one REAL
-    24-bit BI_RGB bitmap per document, alternating bottom-up and
-    top-down row storage by doc parity so BOTH orientation paths run
-    under the registered query (decoded pixels are identical either
-    way — exactly what the closed-form oracle requires)."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
+@_fixture("bmp_fixture", "v1", "bmp")
+def _bmp_fixture(d: int) -> bytes:
+    """One REAL 24-bit BI_RGB bitmap, alternating bottom-up and top-down
+    row storage by doc parity so BOTH orientation paths run under the
+    registered query (decoded pixels are identical either way — exactly
+    what the closed-form oracle requires)."""
+    import numpy as np
 
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np
-
-            for pdf in batches:
-                blobs = []
-                for did in pdf["doc_id"]:
-                    d = int(did)
-                    w = BMP_W_BASE + d % BMP_W_MOD
-                    h = BMP_H_BASE + d % BMP_H_MOD
-                    v = (d * BMP_A + BMP_B * np.arange(w * h * 3, dtype=np.int64)) % 256
-                    blobs.append(
-                        encode_bmp(w, h, v.astype(np.uint8).tobytes(), top_down=d % 2 == 1)
-                    )
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "bmp": blobs})
-
-        ids.mapInPandas(gen, schema="doc_id long, bmp binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "bmp_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
+    w = BMP_W_BASE + d % BMP_W_MOD
+    h = BMP_H_BASE + d % BMP_H_MOD
+    v = (d * BMP_A + BMP_B * np.arange(w * h * 3, dtype=np.int64)) % 256
+    return encode_bmp(w, h, v.astype(np.uint8).tobytes(), top_down=d % 2 == 1)
 
 
 @query(
@@ -961,33 +975,25 @@ def mm_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     splits at 100 TB."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_bmp_fixture(spark, sf_dir))
+    def stats(did, blob):
+        w, h, ch, px = decode_image(bytes(blob))
+        arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        luma = arr.reshape(-1, 3).sum(axis=1) // 3
+        yield {
+            "doc_id": did,
+            "width": w,
+            "height": h,
+            "sum_r": int(arr[0::ch].sum()),
+            "sum_g": int(arr[1::ch].sum()),
+            "sum_b": int(arr[2::ch].sum()),
+            "psum_luma": int((np.arange(len(luma), dtype=np.int64) * luma).sum()),
+        }
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf["doc_id"], pdf["bmp"]):
-                w, h, ch, px = decode_image(bytes(blob))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                luma = arr.reshape(-1, 3).sum(axis=1) // 3
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "sum_r": int(arr[0::ch].sum()),
-                        "sum_g": int(arr[1::ch].sum()),
-                        "sum_b": int(arr[2::ch].sum()),
-                        "psum_luma": int(
-                            (np.arange(len(luma), dtype=np.int64) * luma).sum()
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "bmp_fixture")),
+        ["doc_id", "bmp"],
         stats,
-        schema="doc_id long, width int, height int, "
+        "doc_id long, width int, height int, "
         "sum_r long, sum_g long, sum_b long, psum_luma long",
     )
 
@@ -999,6 +1005,7 @@ JPG_BH_BASE, JPG_BH_MOD = 2, 2  # blocks high: 2..3  (height 16..24)
 JPG_A, JPG_B = 11, 7  # block value v(b) = (doc_id*A + B*b) % 256
 
 
+@_fixture("jpeg_fixture", "v3", "jpg")
 def _jpeg_fixture(doc_id: int) -> bytes:
     from .jpeg import encode_jpeg_blocks
 
@@ -1008,35 +1015,27 @@ def _jpeg_fixture(doc_id: int) -> bytes:
     return encode_jpeg_blocks(bw, bh, values)
 
 
-def ensure_jpeg_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per corpus version) the JPEG fixture table — one REAL
-    baseline JPEG per document id — via the committed-artifact protocol
-    (same contract as ensure_png_fixture)."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
+def _jpeg_block_stats(did, jpg) -> Iterator[dict]:
+    """Per-row kernel of the 8-bit single-component DCT decodes
+    (baseline, arithmetic, arithmetic-progressive, hierarchical):
+    dimensions, block count and exact luminance sums."""
+    import numpy as np
 
-    def build(dest: str) -> None:
-        # corpus-scaled shards so the downstream decode parallelizes like
-        # a real multi-split corpus (a 1-file fixture decoded on 1 task
-        # was the whole sf1 wall time)
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
+    w, h, ch, px = decode_image(bytes(jpg))
+    arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+    yield {
+        "doc_id": did,
+        "width": w,
+        "height": h,
+        "n_blocks": (w // 8) * (h // 8),
+        "sum_lum": int(arr.sum()),
+        "sum_sq": int((arr * arr).sum()),
+    }
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
 
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "jpeg_fixture", "v3", [table_path(sf_dir, "documents")], build
-    )
+_JPEG_BLOCK_SCHEMA = (
+    "doc_id long, width int, height int, n_blocks int, sum_lum long, sum_sq long"
+)
 
 
 @query(
@@ -1078,32 +1077,11 @@ def mm_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by the sparse-coefficient round-trip pytest. Same 100 TB
     shape as mm_decode_png: one vectorized decode per Arrow batch,
     fixed-size per-image outputs, partitions scale with input splits."""
-    import numpy as np
-
-    src = spark.read.parquet(ensure_jpeg_fixture(spark, sf_dir))
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, ch, px = decode_image(bytes(jpg))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "n_blocks": (w // 8) * (h // 8),
-                        "sum_lum": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, n_blocks int, "
-        "sum_lum long, sum_sq long",
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "jpeg_fixture")),
+        ["doc_id", "jpg"],
+        _jpeg_block_stats,
+        _JPEG_BLOCK_SCHEMA,
     )
 
 
@@ -1114,6 +1092,7 @@ JP4_MH_BASE, JP4_MH_MOD = 1, 3  # MCUs high: 1..3  (height 16..48)
 JP4_A, JP4_B, JP4_C = 13, 5, 89  # channel c of MCU m: (id*A + B*m + C*c) % 256
 
 
+@_fixture("jpeg420_fixture", "v1", "jpg")
 def _jpeg420_fixture(doc_id: int) -> bytes:
     from .jpeg import encode_jpeg_color
 
@@ -1126,33 +1105,31 @@ def _jpeg420_fixture(doc_id: int) -> bytes:
     return encode_jpeg_color(mw, mh, trip, subsample="420")
 
 
-def ensure_jpeg420_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per corpus version) the 4:2:0 color-JPEG fixture table
-    — one REAL chroma-subsampled baseline JPEG per document id — via the
-    committed-artifact protocol, corpus-scaled shards (same contract and
-    parallelism rationale as ensure_jpeg_fixture)."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
+def _jpeg_plane_stats(did, jpg) -> Iterator[dict]:
+    """Per-row kernel of the 4:2:0 color decodes (baseline and
+    progressive): dimensions, MCU count and exact per-component sums
+    over the UPSAMPLED Y/Cb/Cr planes."""
+    import numpy as np
 
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
+    from .jpeg import decode_jpeg
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg420_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
+    w, h, nc, planes = decode_jpeg(bytes(jpg), components=True)
+    sums = [int(p.astype(np.int64).sum()) for p in planes]
+    yield {
+        "doc_id": did,
+        "width": w,
+        "height": h,
+        "n_mcus": (w // 16) * (h // 16),
+        "sum_y": sums[0],
+        "sum_cb": sums[1],
+        "sum_cr": sums[2],
+    }
 
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
 
-    return ensure_artifact(
-        spark, sf_dir, "jpeg420_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
+_JPEG_PLANE_SCHEMA = (
+    "doc_id long, width int, height int, n_mcus int, "
+    "sum_y long, sum_cb long, sum_cr long"
+)
 
 
 @query(
@@ -1199,35 +1176,11 @@ def mm_decode_jpeg_420(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash. Same 100 TB shape as mm_decode_jpeg: vectorized decode per
     Arrow batch, fixed-size outputs, partitions scale with input
     splits."""
-    import numpy as np
-
-    src = spark.read.parquet(ensure_jpeg420_fixture(spark, sf_dir))
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, nc, planes = decode_jpeg(bytes(jpg), components=True)
-                sums = [int(p.astype(np.int64).sum()) for p in planes]
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "n_mcus": (w // 16) * (h // 16),
-                        "sum_y": sums[0],
-                        "sum_cb": sums[1],
-                        "sum_cr": sums[2],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, n_mcus int, "
-        "sum_y long, sum_cb long, sum_cr long",
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "jpeg420_fixture")),
+        ["doc_id", "jpg"],
+        _jpeg_plane_stats,
+        _JPEG_PLANE_SCHEMA,
     )
 
 
@@ -1237,6 +1190,7 @@ JPR_MH_BASE, JPR_MH_MOD = 1, 3  # MCUs high: 1..3
 JPR_A, JPR_B, JPR_C = 17, 3, 71  # channel c of MCU m: (id*A + B*m + C*c) % 256
 
 
+@_fixture("jpeg_prog_fixture", "v1", "jpg")
 def _jpeg_progressive_fixture(doc_id: int) -> bytes:
     from .jpeg import encode_jpeg_progressive_color
 
@@ -1247,34 +1201,6 @@ def _jpeg_progressive_fixture(doc_id: int) -> bytes:
         for m in range(mw * mh)
     ]
     return encode_jpeg_progressive_color(mw, mh, trip)
-
-
-def ensure_jpeg_progressive_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL progressive (SOF2) 4:2:0 color
-    JPEGs, one per document id — corpus-scaled shards like every binary
-    fixture (test_fixture_artifacts_are_sharded enforces the floor)."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg_progressive_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
-
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "jpeg_prog_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
 
 
 @query(
@@ -1322,35 +1248,11 @@ def mm_decode_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     hook remains. 100 TB shape unchanged: one vectorized
     decode per Arrow batch, fixed-size outputs, partitions scale with
     input splits."""
-    import numpy as np
-
-    src = spark.read.parquet(ensure_jpeg_progressive_fixture(spark, sf_dir))
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, nc, planes = decode_jpeg(bytes(jpg), components=True)
-                sums = [int(p.astype(np.int64).sum()) for p in planes]
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "n_mcus": (w // 16) * (h // 16),
-                        "sum_y": sums[0],
-                        "sum_cb": sums[1],
-                        "sum_cr": sums[2],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, n_mcus int, "
-        "sum_y long, sum_cb long, sum_cr long",
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "jpeg_prog_fixture")),
+        ["doc_id", "jpg"],
+        _jpeg_plane_stats,
+        _JPEG_PLANE_SCHEMA,
     )
 
 
@@ -1360,6 +1262,7 @@ JAR_BH_BASE, JAR_BH_MOD = 2, 3  # blocks high: 2..4  (height 16..32)
 JAR_A, JAR_B = 23, 9  # block value v(b) = (doc_id*A + B*b) % 256
 
 
+@_fixture("jpeg_arith_fixture", "v1", "jpg")
 def _jpeg_arith_fixture(doc_id: int) -> bytes:
     from .jpeg_arith import encode_jpeg_arith_blocks
 
@@ -1369,34 +1272,6 @@ def _jpeg_arith_fixture(doc_id: int) -> bytes:
     # restart interval cycles 0 (none) / 1 / 2 so the committed corpus
     # exercises the QM restart-resync path, not just unbroken segments
     return encode_jpeg_arith_blocks(bw, bh, values, restart_interval=doc_id % 3)
-
-
-def ensure_jpeg_arith_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL arithmetic-coded (SOF9) JPEGs,
-    one per document id — corpus-scaled shards like every binary fixture
-    (test_fixture_artifacts_are_sharded enforces the floor)."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg_arith_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
-
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "jpeg_arith_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
 
 
 @query(
@@ -1440,34 +1315,11 @@ def mm_decode_jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture cycles restart intervals 0/1/2 so committed streams cover
     QM resync too. 100 TB shape unchanged: one vectorized decode per
     Arrow batch, partitions scale with input splits."""
-    import numpy as np
-
-    src = spark.read.parquet(ensure_jpeg_arith_fixture(spark, sf_dir))
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, ch, px = decode_jpeg(bytes(jpg))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "n_blocks": (w // 8) * (h // 8),
-                        "sum_lum": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, n_blocks int, "
-        "sum_lum long, sum_sq long",
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "jpeg_arith_fixture")),
+        ["doc_id", "jpg"],
+        _jpeg_block_stats,
+        _JPEG_BLOCK_SCHEMA,
     )
 
 
@@ -1477,7 +1329,10 @@ JAP_BH_BASE, JAP_BH_MOD = 2, 2  # blocks high: 2..3  (height 16..24)
 JAP_A, JAP_B = 29, 13  # block value v(b) = (doc_id*A + B*b) % 256
 
 
+@_fixture("jpeg_arith_prog_fixture", "v1", "jpg")
 def _jpeg_arith_prog_fixture(doc_id: int) -> bytes:
+    """REAL arithmetic-coded PROGRESSIVE (SOF10) JPEG — three QM-coded
+    scans per stream (DC first at Al=1, DC refinement, AC band EOB)."""
     from .jpeg_arith import encode_jpeg_arith_progressive
 
     bw = JAP_BW_BASE + doc_id % JAP_BW_MOD
@@ -1486,40 +1341,6 @@ def _jpeg_arith_prog_fixture(doc_id: int) -> bytes:
     # restart interval cycles 0/1/2 — committed streams exercise the
     # per-scan QM resync path, same coverage discipline as the SOF9 twin
     return encode_jpeg_arith_progressive(bw, bh, values, restart_interval=doc_id % 3)
-
-
-def ensure_jpeg_arith_prog_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL arithmetic-coded PROGRESSIVE
-    (SOF10) JPEGs — three QM-coded scans per stream (DC first at Al=1,
-    DC refinement, AC band EOB), one per document id; corpus-scaled
-    shards like every binary fixture."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg_arith_prog_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
-
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "jpeg_arith_prog_fixture",
-        "v1",
-        [table_path(sf_dir, "documents")],
-        build,
-    )
 
 
 @query(
@@ -1564,34 +1385,11 @@ def mm_decode_jpeg_arith_prog(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented lib-bound hooks — they need codec libraries the
     container lacks. 100 TB shape unchanged: one vectorized decode per
     Arrow batch, partitions scale with input splits."""
-    import numpy as np
-
-    src = spark.read.parquet(ensure_jpeg_arith_prog_fixture(spark, sf_dir))
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, ch, px = decode_jpeg(bytes(jpg))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "n_blocks": (w // 8) * (h // 8),
-                        "sum_lum": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, n_blocks int, "
-        "sum_lum long, sum_sq long",
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "jpeg_arith_prog_fixture")),
+        ["doc_id", "jpg"],
+        _jpeg_block_stats,
+        _JPEG_BLOCK_SCHEMA,
     )
 
 
@@ -1601,6 +1399,7 @@ JLL_H_BASE, JLL_H_MOD = 7, 6  # height 7..12
 JLL_A, JLL_B = 37, 11  # pixel i of doc d: (d*A + B*i) % 256
 
 
+@_fixture("jpeg_lossless_fixture", "v1", "jpg")
 def _jpeg_lossless_fixture(doc_id: int) -> bytes:
     from .jpeg import encode_jpeg_lossless
 
@@ -1616,36 +1415,28 @@ def _jpeg_lossless_fixture(doc_id: int) -> bytes:
     )
 
 
-def ensure_jpeg_lossless_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL lossless (SOF3) JPEGs, one per
-    document id; corpus-scaled shards like every binary fixture."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
+def _jpeg_lossless_stats(did, jpg) -> Iterator[dict]:
+    """Per-row kernel of the 8-bit lossless decodes (Huffman SOF3 and
+    arithmetic SOF11): dimensions, the doc's predictor and exact sums."""
+    import numpy as np
 
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
+    from .jpeg import decode_jpeg
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg_lossless_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
+    w, h, ch, px = decode_jpeg(bytes(jpg))
+    arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+    yield {
+        "doc_id": did,
+        "width": w,
+        "height": h,
+        "predictor": 1 + int(did) % 7,
+        "sum_lum": int(arr.sum()),
+        "sum_sq": int((arr * arr).sum()),
+    }
 
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
 
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "jpeg_lossless_fixture",
-        "v1",
-        [table_path(sf_dir, "documents")],
-        build,
-    )
+_JPEG_LOSSLESS_SCHEMA = (
+    "doc_id long, width int, height int, predictor int, sum_lum long, sum_sq long"
+)
 
 
 @query(
@@ -1685,34 +1476,11 @@ def mm_decode_jpeg_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
     round 11 every T.81 frame type decodes. 100 TB shape
     unchanged: one vectorized decode per Arrow batch, partitions scale
     with input splits."""
-    import numpy as np
-
-    src = spark.read.parquet(ensure_jpeg_lossless_fixture(spark, sf_dir))
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, ch, px = decode_jpeg(bytes(jpg))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "predictor": 1 + int(did) % 7,
-                        "sum_lum": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, predictor int, "
-        "sum_lum long, sum_sq long",
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "jpeg_lossless_fixture")),
+        ["doc_id", "jpg"],
+        _jpeg_lossless_stats,
+        _JPEG_LOSSLESS_SCHEMA,
     )
 
 
@@ -1723,7 +1491,10 @@ JHR_V_A, JHR_V_B = 41, 64  # base value v0(d) = 64 + (d*41) % 64  (64..127)
 JHR_R_A, JHR_R_B = 17, 13  # residual r(d,b) = ((d*17 + b*13) % 121) - 60
 
 
+@_fixture("jpeg_hier_fixture", "v1", "jpg")
 def _jpeg_hier_fixture(doc_id: int) -> bytes:
+    """REAL hierarchical JPEG stream: DHP + half-resolution SOF0 initial
+    frame + EXP + SOF5 differential frame."""
     from .jpeg import encode_jpeg_hierarchical
 
     bw = JHR_BW_BASE + doc_id % JHR_BW_MOD
@@ -1734,39 +1505,6 @@ def _jpeg_hier_fixture(doc_id: int) -> bytes:
         for b in range(4 * bw * bh)
     ]
     return encode_jpeg_hierarchical(bw, bh, v0, res)
-
-
-def ensure_jpeg_hier_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL hierarchical JPEG streams (DHP +
-    half-resolution SOF0 initial frame + EXP + SOF5 differential frame),
-    one per document id; corpus-scaled shards like every binary fixture."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg_hier_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
-
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "jpeg_hier_fixture",
-        "v1",
-        [table_path(sf_dir, "documents")],
-        build,
-    )
 
 
 @query(
@@ -1808,34 +1546,11 @@ def mm_decode_jpeg_hierarchical(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm_decode_jpeg_hier_kinds (round 11) extends this walk to ALL SIX
     differential frame types. 100 TB shape unchanged: one vectorized
     decode per Arrow batch, partitions scale with input splits."""
-    import numpy as np
-
-    src = spark.read.parquet(ensure_jpeg_hier_fixture(spark, sf_dir))
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, ch, px = decode_jpeg(bytes(jpg))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "n_blocks": (w // 8) * (h // 8),
-                        "sum_lum": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, n_blocks int, "
-        "sum_lum long, sum_sq long",
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "jpeg_hier_fixture")),
+        ["doc_id", "jpg"],
+        _jpeg_block_stats,
+        _JPEG_BLOCK_SCHEMA,
     )
 
 
@@ -1845,6 +1560,7 @@ JLA_H_BASE, JLA_H_MOD = 6, 5  # height 6..10
 JLA_A, JLA_B = 53, 19  # pixel i of doc d: (d*A + B*i) % 256
 
 
+@_fixture("jpeg_lossless_arith_fixture", "v1", "jpg")
 def _jpeg_lossless_arith_fixture(doc_id: int) -> bytes:
     from .jpeg_arith import encode_jpeg_lossless_arith
 
@@ -1854,38 +1570,6 @@ def _jpeg_lossless_arith_fixture(doc_id: int) -> bytes:
     dri = (doc_id % 3) * w
     return encode_jpeg_lossless_arith(
         w, h, pix, predictor=1 + doc_id % 7, restart_interval=dri
-    )
-
-
-def ensure_jpeg_lossless_arith_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL lossless-arithmetic (SOF11)
-    JPEGs, one per document id; corpus-scaled shards."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg_lossless_arith_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
-
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "jpeg_lossless_arith_fixture",
-        "v1",
-        [table_path(sf_dir, "documents")],
-        build,
     )
 
 
@@ -1923,34 +1607,13 @@ def mm_decode_jpeg_lossless_arith(spark: SparkSession, sf_dir: str) -> DataFrame
     shifts a pixel sum and breaks the hash. 100 TB shape unchanged:
     one vectorized decode per Arrow batch, partitions scale with input
     splits."""
-    import numpy as np
-
-    src = spark.read.parquet(ensure_jpeg_lossless_arith_fixture(spark, sf_dir))
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, ch, px = decode_jpeg(bytes(jpg))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "predictor": 1 + int(did) % 7,
-                        "sum_lum": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, predictor int, "
-        "sum_lum long, sum_sq long",
+    return _per_row(
+        spark.read.parquet(
+            _binary_fixture(spark, sf_dir, "jpeg_lossless_arith_fixture")
+        ),
+        ["doc_id", "jpg"],
+        _jpeg_lossless_stats,
+        _JPEG_LOSSLESS_SCHEMA,
     )
 
 
@@ -1960,6 +1623,7 @@ J16_H_BASE, J16_H_MOD = 5, 5  # height 5..9
 J16_A, J16_B = 811, 157  # pixel i of doc d: (d*A + B*i) % 4096
 
 
+@_fixture("jpeg_lossless16_fixture", "v1", "jpg")
 def _jpeg_lossless16_fixture(doc_id: int) -> bytes:
     # alternate entropy layer by doc parity: even docs Huffman (SOF3 with
     # the 17-symbol SSSS table), odd docs arithmetic (SOF11)
@@ -1971,38 +1635,6 @@ def _jpeg_lossless16_fixture(doc_id: int) -> bytes:
     pix = [(doc_id * J16_A + J16_B * i) % 4096 for i in range(w * h)]
     enc = encode_jpeg_lossless if doc_id % 2 == 0 else encode_jpeg_lossless_arith
     return enc(w, h, pix, predictor=1 + doc_id % 7, precision=12)
-
-
-def ensure_jpeg_lossless16_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of 12-bit lossless JPEGs (Huffman/arith
-    alternating by doc parity); corpus-scaled shards."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg_lossless16_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
-
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "jpeg_lossless16_fixture",
-        "v1",
-        [table_path(sf_dir, "documents")],
-        build,
-    )
 
 
 @query(
@@ -2038,31 +1670,25 @@ def mm_decode_jpeg_lossless16(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions scale with input splits."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_jpeg_lossless16_fixture(spark, sf_dir))
+    from .jpeg import decode_jpeg
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import decode_jpeg
+    def stats(did, jpg):
+        w, h, ch, planes = decode_jpeg(bytes(jpg), components=True)
+        arr = planes[0].astype(np.int64)
+        yield {
+            "doc_id": did,
+            "width": w,
+            "height": h,
+            "entropy": "huffman" if int(did) % 2 == 0 else "arith",
+            "sum_lum": int(arr.sum()),
+            "sum_sq": int((arr * arr).sum()),
+        }
 
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, ch, planes = decode_jpeg(bytes(jpg), components=True)
-                arr = planes[0].astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "entropy": "huffman" if int(did) % 2 == 0 else "arith",
-                        "sum_lum": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "jpeg_lossless16_fixture")),
+        ["doc_id", "jpg"],
         stats,
-        schema="doc_id long, width int, height int, entropy string, "
+        "doc_id long, width int, height int, entropy string, "
         "sum_lum long, sum_sq long",
     )
 
@@ -2073,6 +1699,7 @@ J12_BH_BASE, J12_BH_MOD = 2, 2  # blocks high 2..3
 J12_A, J12_B = 997, 313  # block b of doc d: (d*A + B*b) % 4096
 
 
+@_fixture("jpeg12_fixture", "v2", "jpg")
 def _jpeg12_fixture(doc_id: int) -> bytes:
     # cycle the DCT process AND entropy layer by doc_id % 4: 0 = Huffman
     # extended sequential SOF1 (restart markers every 2 MCUs on every
@@ -2095,38 +1722,6 @@ def _jpeg12_fixture(doc_id: int) -> bytes:
     if kind == 2:
         return encode_jpeg_arith_blocks(bw, bh, vals, restart_interval=dri, precision=12)
     return encode_jpeg_arith_progressive(bw, bh, vals, precision=12)
-
-
-def ensure_jpeg12_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of 12-bit DCT JPEGs (extended-sequential /
-    progressive alternating by doc parity); corpus-scaled shards."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg12_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
-
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "jpeg12_fixture",
-        "v2",
-        [table_path(sf_dir, "documents")],
-        build,
-    )
 
 
 @query(
@@ -2170,32 +1765,26 @@ def mm_decode_jpeg12(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: Arrow-batched mapInPandas, partitions scale with splits."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_jpeg12_fixture(spark, sf_dir))
+    from .jpeg import decode_jpeg
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import decode_jpeg
+    def stats(did, jpg):
+        w, h, ch, planes = decode_jpeg(bytes(jpg), components=True)
+        assert planes[0].dtype == np.uint16, "12-bit plane must be uint16"
+        arr = planes[0].astype(np.int64)
+        yield {
+            "doc_id": did,
+            "width": w,
+            "height": h,
+            "kind": ("seq", "prog", "aseq", "aprog")[int(did) % 4],
+            "sum_lum": int(arr.sum()),
+            "sum_sq": int((arr * arr).sum()),
+        }
 
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, ch, planes = decode_jpeg(bytes(jpg), components=True)
-                assert planes[0].dtype == np.uint16, "12-bit plane must be uint16"
-                arr = planes[0].astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "kind": ("seq", "prog", "aseq", "aprog")[int(did) % 4],
-                        "sum_lum": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "jpeg12_fixture")),
+        ["doc_id", "jpg"],
         stats,
-        schema="doc_id long, width int, height int, kind string, "
+        "doc_id long, width int, height int, kind string, "
         "sum_lum long, sum_sq long",
     )
 
@@ -2206,7 +1795,10 @@ JHK_V_A, JHK_V_B = 43, 64  # base value v0(d) = 64 + (d*43) % 64
 JHK_R_A, JHK_R_B = 19, 11  # residual r(d,b) = ((d*19 + b*11) % 121) - 60
 
 
+@_fixture("jpeg_hier_kinds_fixture", "v1", "jpg")
 def _jpeg_hier_kinds_fixture(doc_id: int) -> bytes:
+    """Hierarchical JPEG stream cycling ALL SIX differential frame types
+    by doc_id."""
     from .jpeg import encode_jpeg_hierarchical
 
     bw = JHR_BW_BASE + doc_id % JHR_BW_MOD
@@ -2218,38 +1810,6 @@ def _jpeg_hier_kinds_fixture(doc_id: int) -> bytes:
     ]
     return encode_jpeg_hierarchical(
         bw, bh, v0, res, kind=JHK_KINDS[doc_id % 6]
-    )
-
-
-def ensure_jpeg_hier_kinds_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of hierarchical JPEG streams cycling ALL
-    SIX differential frame types by doc_id; corpus-scaled shards."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg_hier_kinds_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
-
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "jpeg_hier_kinds_fixture",
-        "v1",
-        [table_path(sf_dir, "documents")],
-        build,
     )
 
 
@@ -2293,31 +1853,25 @@ def mm_decode_jpeg_hier_kinds(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas decode, partitions scale with input splits."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_jpeg_hier_kinds_fixture(spark, sf_dir))
+    from .jpeg import decode_jpeg
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import decode_jpeg
+    def stats(did, jpg):
+        w, h, ch, px = decode_jpeg(bytes(jpg))
+        arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        yield {
+            "doc_id": did,
+            "kind": JHK_KINDS[int(did) % 6],
+            "width": w,
+            "height": h,
+            "sum_lum": int(arr.sum()),
+            "sum_sq": int((arr * arr).sum()),
+        }
 
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, ch, px = decode_jpeg(bytes(jpg))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "kind": JHK_KINDS[int(did) % 6],
-                        "width": w,
-                        "height": h,
-                        "sum_lum": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "jpeg_hier_kinds_fixture")),
+        ["doc_id", "jpg"],
         stats,
-        schema="doc_id long, kind string, width int, height int, "
+        "doc_id long, kind string, width int, height int, "
         "sum_lum long, sum_sq long",
     )
 
@@ -2613,7 +2167,10 @@ G11_N_BASE, G11_N_MOD = 400, 257  # samples per clip: 400..656
 G11_A, G11_B = 29, 13
 
 
+@_fixture("g711_fixture", "v1", "mu", "al")
 def _g711_fixture(doc_id: int) -> tuple[bytes, bytes]:
+    """REAL G.711 WAV clips: a μ-law and an A-law twin of the same
+    companded byte stream."""
     import numpy as np
 
     n = G11_N_BASE + doc_id % G11_N_MOD
@@ -2623,40 +2180,6 @@ def _g711_fixture(doc_id: int) -> tuple[bytes, bytes]:
     return (
         encode_wav_g711(8000, 1, payload, 7),  # μ-law
         encode_wav_g711(8000, 1, payload, 6),  # A-law
-    )
-
-
-def ensure_g711_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL G.711 WAV clips (μ-law + A-law
-    twin per document id, same companded byte stream) — corpus-scaled
-    shards like every binary fixture."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                pairs = [_g711_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "mu": [p[0] for p in pairs],
-                        "al": [p[1] for p in pairs],
-                    }
-                )
-
-        ids.mapInPandas(gen, schema="doc_id long, mu binary, al binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "g711_fixture", "v1", [table_path(sf_dir, "documents")], build
     )
 
 
@@ -2707,31 +2230,25 @@ def mm_audio_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
     one vectorized gather per batch, no shuffle, fixed-size outputs."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_g711_fixture(spark, sf_dir))
+    def stats(did, mu, al):
+        _r, _c, smu = decode_audio_np(bytes(mu))
+        _r, _c, sal = decode_audio_np(bytes(al))
+        smu = smu.astype(np.int64)
+        sal = sal.astype(np.int64)
+        yield {
+            "doc_id": did,
+            "n_samples": len(smu),
+            "sum_mu": int(smu.sum()),
+            "sum_abs_mu": int(np.abs(smu).sum()),
+            "sum_al": int(sal.sum()),
+            "sum_abs_al": int(np.abs(sal).sum()),
+        }
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, mu, al in zip(pdf["doc_id"], pdf["mu"], pdf["al"]):
-                _r, _c, smu = decode_audio_np(bytes(mu))
-                _r, _c, sal = decode_audio_np(bytes(al))
-                smu = smu.astype(np.int64)
-                sal = sal.astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_samples": len(smu),
-                        "sum_mu": int(smu.sum()),
-                        "sum_abs_mu": int(np.abs(smu).sum()),
-                        "sum_al": int(sal.sum()),
-                        "sum_abs_al": int(np.abs(sal).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "g711_fixture")),
+        ["doc_id", "mu", "al"],
         stats,
-        schema="doc_id long, n_samples long, sum_mu long, sum_abs_mu long, "
+        "doc_id long, n_samples long, sum_mu long, sum_abs_mu long, "
         "sum_al long, sum_abs_al long",
     )
 
@@ -2746,7 +2263,11 @@ ADPCM_IA, ADPCM_IB = 1, 13  # idx0(d,b)  = (d*IA + IB*b) % 89
 ADPCM_NA, ADPCM_NB_, ADPCM_NC = 7, 5, 3  # nib(d,b,t) = (d*NA+NB*b+NC*t)%16
 
 
+@_fixture("adpcm_fixture", "v1", "wav")
 def _adpcm_fixture(doc_id: int) -> bytes:
+    """One REAL format-17 WAV whose nibble stream, per-block seed
+    predictor, and step index are closed forms of (doc_id, block), so
+    the sequential decoder state machine is exactly replayable."""
     import struct
 
     import numpy as np
@@ -2761,39 +2282,6 @@ def _adpcm_fixture(doc_id: int) -> bytes:
         packed = (nibs[0::2] | (nibs[1::2] << 4)).astype(np.uint8).tobytes()
         blocks.append(struct.pack("<hBB", pred0, idx0, 0) + packed)
     return encode_wav_adpcm(8000, ADPCM_ALIGN, b"".join(blocks))
-
-
-def ensure_adpcm_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per corpus version) the IMA-ADPCM fixture table — one
-    REAL format-17 WAV per document whose nibble stream, per-block seed
-    predictor, and step index are closed forms of (doc_id, block), so
-    the sequential decoder state machine is exactly replayable."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "wav": [_adpcm_fixture(int(d)) for d in pdf["doc_id"]],
-                    }
-                )
-
-        ids.mapInPandas(gen, schema="doc_id long, wav binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "adpcm_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
 
 
 _IMA_STEP_SQL = "[" + ",".join(str(s) for s in IMA_STEPS) + "]"
@@ -2866,7 +2354,7 @@ def mm_audio_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries; nothing shuffles."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_adpcm_fixture(spark, sf_dir))
+    src = spark.read.parquet(_binary_fixture(spark, sf_dir, "adpcm_fixture"))
     spb = (ADPCM_ALIGN - 4) * 2 + 1
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2937,46 +2425,15 @@ WAV_N_BASE, WAV_N_MOD = 400, 600
 WAV_RATES = 2000  # rate = 8000 + (d % 5) * WAV_RATES
 
 
-def _wav_fixture(doc_id: int) -> tuple[int, "list[int]"]:
+@_fixture("wav_fixture", "v3", "wav")
+def _wav_fixture(doc_id: int) -> bytes:
+    """One real RIFF/PCM16 clip."""
     import numpy as np
 
     n = WAV_N_BASE + doc_id % WAV_N_MOD
     rate = 8000 + (doc_id % 5) * WAV_RATES
     s = (doc_id * WAV_A + WAV_B * np.arange(n, dtype=np.int64)) % 4001 - 2000
-    return rate, s.astype(np.int16)
-
-
-def ensure_wav_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per corpus version) the WAV fixture table — one real
-    RIFF/PCM16 payload per document id — via the committed-artifact
-    protocol."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        # corpus-scaled shards: decode parallelism must grow with the
-        # corpus (same 30x-probe finding as the PNG fixture)
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                wavs = []
-                for did in pdf["doc_id"]:
-                    rate, s = _wav_fixture(int(did))
-                    wavs.append(encode_wav(rate, 1, s))  # ndarray fast path
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "wav": wavs})
-
-        ids.mapInPandas(gen, schema="doc_id long, wav binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "wav_fixture", "v3", [table_path(sf_dir, "documents")], build
-    )
+    return encode_wav(rate, 1, s.astype(np.int16))  # ndarray fast path
 
 
 @query(
@@ -3011,7 +2468,7 @@ def mm_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     clip, one vectorized decode per Arrow batch."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_wav_fixture(spark, sf_dir))
+    src = spark.read.parquet(_binary_fixture(spark, sf_dir, "wav_fixture"))
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -3087,7 +2544,7 @@ def mm_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     would swap the midpoint gather for a polyphase FIR, same plumbing."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_wav_fixture(spark, sf_dir))
+    src = spark.read.parquet(_binary_fixture(spark, sf_dir, "wav_fixture"))
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -3142,6 +2599,7 @@ GIF_W_BASE, GIF_W_MOD = 16, 17  # width 16..32
 GIF_H_BASE, GIF_H_MOD = 12, 13  # height 12..24
 
 
+@_fixture("gif_fixture", "v1", "gif")
 def _gif_fixture(doc_id: int) -> bytes:
     import numpy as np
 
@@ -3153,33 +2611,6 @@ def _gif_fixture(doc_id: int) -> bytes:
         np.uint8
     )
     return encode_gif(w, h, idx, interlace=bool(doc_id % 2))
-
-
-def ensure_gif_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL LZW-compressed GIFs, one per
-    document id — corpus-scaled shards like every binary fixture."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                gifs = [_gif_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "gif": gifs})
-
-        ids.mapInPandas(gen, schema="doc_id long, gif binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "gif_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
 
 
 @query(
@@ -3221,31 +2652,25 @@ def mm_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     splits."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_gif_fixture(spark, sf_dir))
+    from .gif import decode_gif
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .gif import decode_gif
+    def stats(did, g):
+        w, h, _ch, idx = decode_gif(bytes(g), indices=True)
+        v = idx.astype(np.int64)
+        yield {
+            "doc_id": did,
+            "width": w,
+            "height": h,
+            "sum_lum": int(v.sum()),
+            "sum_sq": int((v * v).sum()),
+            "n_colors": int(np.unique(v).size),
+        }
 
-        for pdf in batches:
-            rows = []
-            for did, g in zip(pdf["doc_id"], pdf["gif"]):
-                w, h, _ch, idx = decode_gif(bytes(g), indices=True)
-                v = idx.astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "sum_lum": int(v.sum()),
-                        "sum_sq": int((v * v).sum()),
-                        "n_colors": int(np.unique(v).size),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "gif_fixture")),
+        ["doc_id", "gif"],
         stats,
-        schema="doc_id long, width int, height int, "
+        "doc_id long, width int, height int, "
         "sum_lum long, sum_sq long, n_colors int",
     )
 
@@ -3259,6 +2684,7 @@ GFA_F_BASE, GFA_F_MOD = 2, 4  # frames 2..5
 GFA_DELAY = 4  # centiseconds per frame
 
 
+@_fixture("gif_anim_fixture", "v1", "gif")
 def _gif_anim_fixture(doc_id: int) -> bytes:
     import numpy as np
 
@@ -3275,32 +2701,6 @@ def _gif_anim_fixture(doc_id: int) -> bytes:
         for f in range(nf)
     ]
     return encode_gif_animation(w, h, frames, delay_cs=GFA_DELAY)
-
-
-def ensure_gif_anim_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL multi-frame (animated) GIFs."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                gifs = [_gif_anim_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "gif": gifs})
-
-        ids.mapInPandas(gen, schema="doc_id long, gif binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "gif_anim_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
 
 
 @query(
@@ -3342,30 +2742,24 @@ def mm_gif_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches; output is frames × O(1) stats, never pixels."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_gif_anim_fixture(spark, sf_dir))
+    from .gif import decode_gif_frames
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .gif import decode_gif_frames
+    def stats(did, g):
+        for f, (w, h, idx, delay) in enumerate(decode_gif_frames(bytes(g))):
+            yield {
+                "doc_id": did,
+                "frame": f,
+                "width": w,
+                "height": h,
+                "delay_cs": delay,
+                "sum_lum": int(idx.astype(np.int64).sum()),
+            }
 
-        for pdf in batches:
-            rows = []
-            for did, g in zip(pdf["doc_id"], pdf["gif"]):
-                for f, (w, h, idx, delay) in enumerate(decode_gif_frames(bytes(g))):
-                    rows.append(
-                        {
-                            "doc_id": did,
-                            "frame": f,
-                            "width": w,
-                            "height": h,
-                            "delay_cs": delay,
-                            "sum_lum": int(idx.astype(np.int64).sum()),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "gif_anim_fixture")),
+        ["doc_id", "gif"],
         stats,
-        schema="doc_id long, frame int, width int, height int, "
+        "doc_id long, frame int, width int, height int, "
         "delay_cs int, sum_lum long",
     )
 
@@ -3380,7 +2774,10 @@ FLC_RATES = 4000  # rate = 8000 + (d % 4) * FLC_RATES
 FLC_BLOCK = 256
 
 
+@_fixture("flac_fixture", "v1", "flac")
 def _flac_fixture(doc_id: int) -> bytes:
+    """One REAL FLAC stream: fixed-predictor subframes, rice residuals,
+    CRC-8/16, STREAMINFO MD5."""
     import numpy as np
 
     from .flac import encode_flac
@@ -3389,34 +2786,6 @@ def _flac_fixture(doc_id: int) -> bytes:
     rate = 8000 + (doc_id % 4) * FLC_RATES
     s = (doc_id * FLC_A + FLC_B * np.arange(n, dtype=np.int64)) % 3847 - 1923
     return encode_flac(rate, s, blocksize=FLC_BLOCK)
-
-
-def ensure_flac_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL FLAC streams (fixed-predictor
-    subframes, rice residuals, CRC-8/16, STREAMINFO MD5), one per
-    document id — corpus-scaled shards like every binary fixture."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                flacs = [_flac_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "flac": flacs})
-
-        ids.mapInPandas(gen, schema="doc_id long, flac binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "flac_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
 
 
 @query(
@@ -3462,33 +2831,26 @@ def mm_decode_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     WAV path — the reason real audio corpora ship compressed."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_flac_fixture(spark, sf_dir))
+    from .flac import decode_flac
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .flac import decode_flac
+    def stats(did, fl):
+        rate, nch, bits, s = decode_flac(bytes(fl))
+        absamp = np.abs(s)
+        yield {
+            "doc_id": did,
+            "sample_rate": rate,
+            "n_samples": int(s.size),
+            "n_frames": (s.size + FLC_BLOCK - 1) // FLC_BLOCK,
+            "sum_amp": int(s.sum()),
+            "sum_abs_amp": int(absamp.sum()),
+            "peak_abs": int(absamp.max()) if s.size else 0,
+        }
 
-        for pdf in batches:
-            rows = []
-            for did, fl in zip(pdf["doc_id"], pdf["flac"]):
-                raw = bytes(fl)
-                rate, nch, bits, s = decode_flac(raw)
-                absamp = np.abs(s)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "sample_rate": rate,
-                        "n_samples": int(s.size),
-                        "n_frames": (s.size + FLC_BLOCK - 1) // FLC_BLOCK,
-                        "sum_amp": int(s.sum()),
-                        "sum_abs_amp": int(absamp.sum()),
-                        "peak_abs": int(absamp.max()) if s.size else 0,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "flac_fixture")),
+        ["doc_id", "flac"],
         stats,
-        schema="doc_id long, sample_rate int, n_samples long, n_frames int, "
+        "doc_id long, sample_rate int, n_samples long, n_frames int, "
         "sum_amp long, sum_abs_amp long, peak_abs long",
     )
 
@@ -3534,29 +2896,25 @@ def prep_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         len(paths)
     )
 
-    def read_footers(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def read_footer(table_name, path):
         import os
 
         import pyarrow.parquet as pq
 
-        for pdf in batches:
-            rows = []
-            for table_name, path in zip(pdf["table_name"], pdf["path"]):
-                md = pq.ParquetFile(path).metadata
-                rows.append(
-                    {
-                        "table_name": table_name,
-                        "n_rows": md.num_rows,
-                        "n_row_groups": md.num_row_groups,
-                        "n_columns": md.num_columns,
-                        "size_bytes": os.path.getsize(path),
-                    }
-                )
-            yield pd.DataFrame(rows)
+        md = pq.ParquetFile(path).metadata
+        yield {
+            "table_name": table_name,
+            "n_rows": md.num_rows,
+            "n_row_groups": md.num_row_groups,
+            "n_columns": md.num_columns,
+            "size_bytes": os.path.getsize(path),
+        }
 
-    return pdf_paths.mapInPandas(
-        read_footers,
-        schema="table_name string, n_rows long, n_row_groups long, n_columns long, size_bytes long",
+    return _per_row(
+        pdf_paths,
+        ["table_name", "path"],
+        read_footer,
+        "table_name string, n_rows long, n_row_groups long, n_columns long, size_bytes long",
     )
 
 
@@ -3647,7 +3005,7 @@ def mm_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas, one vectorized decode per batch, linear in images."""
     import numpy as np
 
-    fixture = ensure_png_fixture(spark, sf_dir)
+    fixture = _binary_fixture(spark, sf_dir, "png_fixture")
     pngs = spark.read.parquet(fixture)
 
     def ahash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -3794,7 +3152,7 @@ def mm_image_spectral_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode via _luma_batch, gather 64 samples per image, ONE batched
     8x8x8 einsum for the whole Arrow batch, no shuffle. All-integer
     output (driver-proof)."""
-    pngs = spark.read.parquet(ensure_png_fixture(spark, sf_dir))
+    pngs = spark.read.parquet(_binary_fixture(spark, sf_dir, "png_fixture"))
 
     def phash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -3949,7 +3307,7 @@ def mm_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor, exactly how a 100 TB audio corpus wants it."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_wav_fixture(spark, sf_dir))
+    src = spark.read.parquet(_binary_fixture(spark, sf_dir, "wav_fixture"))
 
     def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -4028,7 +3386,7 @@ def mm_image_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_png_fixture(spark, sf_dir))
+    src = spark.read.parquet(_binary_fixture(spark, sf_dir, "png_fixture"))
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -4116,7 +3474,7 @@ def mm_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     ragged tail frame breaks the hash. Integer-only output."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_wav_fixture(spark, sf_dir))
+    src = spark.read.parquet(_binary_fixture(spark, sf_dir, "wav_fixture"))
 
     def vad(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -4228,7 +3586,7 @@ def mm_image_edge_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (R+G+B)//3 truncation flips some edge count."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_png_fixture(spark, sf_dir))
+    src = spark.read.parquet(_binary_fixture(spark, sf_dir, "png_fixture"))
 
     def census(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -4311,7 +3669,7 @@ def mm_audio_zero_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsing a byte of RIFF."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_wav_fixture(spark, sf_dir))
+    src = spark.read.parquet(_binary_fixture(spark, sf_dir, "wav_fixture"))
 
     def census(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -4398,7 +3756,7 @@ def mm_image_resize_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     thumbnail size by construction, invariant to input resolution."""
     import numpy as np
 
-    fixture = ensure_png_fixture(spark, sf_dir)
+    fixture = _binary_fixture(spark, sf_dir, "png_fixture")
     pngs = spark.read.parquet(fixture)
     G = RESIZE_GRID
 
@@ -4519,7 +3877,7 @@ def mm_audio_spectral_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_image_phash_pairs — never all-pairs audio."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_wav_fixture(spark, sf_dir))
+    src = spark.read.parquet(_binary_fixture(spark, sf_dir, "wav_fixture"))
     wht = np.array(
         [
             [(-1) ** bin(u & t).count("1") for t in range(AUDIO_WHT_FRAME)]
@@ -4600,60 +3958,34 @@ TIF_H_BASE, TIF_H_MOD = 5, 9
 TIF_A, TIF_B = 23, 19  # pixel byte k of doc d: (d*TIF_A + k*TIF_B) % 256
 
 
-def ensure_tiff_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per corpus version) the TIFF fixture table — one REAL
-    strip-organized TIFF per document, sweeping compression
-    (LZW / uncompressed / PackBits, round 11) x horizontal-predictor x
+@_fixture("tiff_fixture", "v3", "tif")
+def _tiff_fixture(d: int) -> bytes:
+    """One REAL strip-organized TIFF, sweeping compression (LZW /
+    uncompressed / PackBits, round 11) x horizontal-predictor x
     little/big-endian by doc_id so every decoder path is value-checked
     under the registered query."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
+    import numpy as np
 
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
+    from .tiff import encode_tiff
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np
-
-            from .tiff import encode_tiff
-
-            for pdf in batches:
-                blobs = []
-                for did in pdf["doc_id"]:
-                    d = int(did)
-                    w = TIF_W_BASE + d % TIF_W_MOD
-                    h = TIF_H_BASE + d % TIF_H_MOD
-                    v = (d * TIF_A + TIF_B * np.arange(w * h * 3, dtype=np.int64)) % 256
-                    blobs.append(
-                        encode_tiff(
-                            w,
-                            h,
-                            v.astype(np.uint8).tobytes(),
-                            compression=(5, 1, 32773)[d % 3],
-                            predictor=2 if (d >> 1) % 2 == 0 else 1,
-                            big_endian=(d >> 2) % 2 == 1,
-                            rows_per_strip=3,
-                            # real EXIF sub-IFD (round 11): ISO SHORT +
-                            # pixel-dimension LONGs, ascending tag order
-                            exif=[
-                                (34855, 3, 100 + (d % 16) * 25),
-                                (40962, 4, w),
-                                (40963, 4, h),
-                            ],
-                        )
-                    )
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "tif": blobs})
-
-        ids.mapInPandas(gen, schema="doc_id long, tif binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "tiff_fixture", "v3", [table_path(sf_dir, "documents")], build
+    w = TIF_W_BASE + d % TIF_W_MOD
+    h = TIF_H_BASE + d % TIF_H_MOD
+    v = (d * TIF_A + TIF_B * np.arange(w * h * 3, dtype=np.int64)) % 256
+    return encode_tiff(
+        w,
+        h,
+        v.astype(np.uint8).tobytes(),
+        compression=(5, 1, 32773)[d % 3],
+        predictor=2 if (d >> 1) % 2 == 0 else 1,
+        big_endian=(d >> 2) % 2 == 1,
+        rows_per_strip=3,
+        # real EXIF sub-IFD (round 11): ISO SHORT + pixel-dimension
+        # LONGs, ascending tag order
+        exif=[
+            (34855, 3, 100 + (d % 16) * 25),
+            (40962, 4, w),
+            (40963, 4, h),
+        ],
     )
 
 
@@ -4698,32 +4030,24 @@ def mm_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode query — partitions scale with input splits at 100 TB."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_tiff_fixture(spark, sf_dir))
+    def stats(did, blob):
+        w, h, ch, px = decode_image(bytes(blob))
+        arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        yield {
+            "doc_id": did,
+            "width": w,
+            "height": h,
+            "sum_r": int(arr[0::ch].sum()),
+            "sum_g": int(arr[1::ch].sum()),
+            "sum_b": int(arr[2::ch].sum()),
+            "psum": int((np.arange(len(arr), dtype=np.int64) * arr).sum()),
+        }
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf["doc_id"], pdf["tif"]):
-                w, h, ch, px = decode_image(bytes(blob))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "sum_r": int(arr[0::ch].sum()),
-                        "sum_g": int(arr[1::ch].sum()),
-                        "sum_b": int(arr[2::ch].sum()),
-                        "psum": int(
-                            (np.arange(len(arr), dtype=np.int64) * arr).sum()
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "tiff_fixture")),
+        ["doc_id", "tif"],
         stats,
-        schema="doc_id long, width int, height int, "
+        "doc_id long, width int, height int, "
         "sum_r long, sum_g long, sum_b long, psum long",
     )
 
@@ -4770,40 +4094,32 @@ def mm_exif_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     values against the main-IFD width/height (= 1 everywhere by
     construction, parsed independently from both IFDs). All cells
     BIGINT/STRING."""
-    src = spark.read.parquet(ensure_tiff_fixture(spark, sf_dir))
+    from .tiff import read_tiff_metadata
 
-    def meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .tiff import read_tiff_metadata
+    def meta(did, blob):
+        m = read_tiff_metadata(bytes(blob))
+        t = m["tags"]
+        w, h = t[256][2], t[257][2]
+        ex = m["exif"]
+        yield {
+            "doc_id": did,
+            "byte_order": m["byte_order"],
+            "n_ifd_entries": m["n_entries"],
+            "width": w,
+            "height": h,
+            "compression": t[259][2],
+            "predictor": t[317][2],
+            "rows_per_strip": t[278][2],
+            "n_strips": t[273][1],
+            "exif_iso": ex[34855][2],
+            "dims_consistent": int(ex[40962][2] == w and ex[40963][2] == h),
+        }
 
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf["doc_id"], pdf["tif"]):
-                m = read_tiff_metadata(bytes(blob))
-                t = m["tags"]
-                w, h = t[256][2], t[257][2]
-                ex = m["exif"]
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "byte_order": m["byte_order"],
-                        "n_ifd_entries": m["n_entries"],
-                        "width": w,
-                        "height": h,
-                        "compression": t[259][2],
-                        "predictor": t[317][2],
-                        "rows_per_strip": t[278][2],
-                        "n_strips": t[273][1],
-                        "exif_iso": ex[34855][2],
-                        "dims_consistent": int(
-                            ex[40962][2] == w and ex[40963][2] == h
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "tiff_fixture")),
+        ["doc_id", "tif"],
         meta,
-        schema="doc_id long, byte_order string, n_ifd_entries long, "
+        "doc_id long, byte_order string, n_ifd_entries long, "
         "width long, height long, compression long, predictor long, "
         "rows_per_strip long, n_strips long, exif_iso long, "
         "dims_consistent long",
@@ -4864,7 +4180,7 @@ def mm_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     query."""
     import numpy as np
 
-    pngs = spark.read.parquet(ensure_png_fixture(spark, sf_dir))
+    pngs = spark.read.parquet(_binary_fixture(spark, sf_dir, "png_fixture"))
 
     def dhash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -4944,7 +4260,7 @@ def mm_image_blur_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel decode-query contract as the rest of the mm_image family."""
     import numpy as np
 
-    pngs = spark.read.parquet(ensure_png_fixture(spark, sf_dir))
+    pngs = spark.read.parquet(_binary_fixture(spark, sf_dir, "png_fixture"))
 
     def blur(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -4996,50 +4312,26 @@ GS_F_BASE, GS_F_MOD = 7, 5  # frames 7..11 (>= 2 cuts guaranteed)
 GS_THRESH = 8  # boundary iff mean abs pixel delta > GS_THRESH
 
 
-def ensure_gif_shots_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture of REAL animated GIFs with SHOT structure —
-    runs of GS_LEN identical frames separated by hard cuts (a constant
-    value shift), the ground truth a shot-boundary detector must
-    recover."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
+@_fixture("gif_shots_fixture", "v1", "gif")
+def _gif_shots_fixture(d: int) -> bytes:
+    """One REAL animated GIF with SHOT structure — runs of GS_LEN
+    identical frames separated by hard cuts (a constant value shift),
+    the ground truth a shot-boundary detector must recover."""
+    import numpy as np
 
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
+    from .gif import encode_gif_animation
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np
-
-            from .gif import encode_gif_animation
-
-            for pdf in batches:
-                gifs = []
-                for did in pdf["doc_id"]:
-                    d = int(did)
-                    w = GS_W_BASE + d % GS_W_MOD
-                    h = GS_H_BASE + d % GS_H_MOD
-                    nf = GS_F_BASE + d % GS_F_MOD
-                    frames = [
-                        (
-                            (d * GS_A + GS_B * np.arange(w * h, dtype=np.int64)
-                             + GS_C * (f // GS_LEN)) % 256
-                        ).astype(np.uint8)
-                        for f in range(nf)
-                    ]
-                    gifs.append(encode_gif_animation(w, h, frames, delay_cs=4))
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "gif": gifs})
-
-        ids.mapInPandas(gen, schema="doc_id long, gif binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "gif_shots_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
+    w = GS_W_BASE + d % GS_W_MOD
+    h = GS_H_BASE + d % GS_H_MOD
+    nf = GS_F_BASE + d % GS_F_MOD
+    frames = [
+        (
+            (d * GS_A + GS_B * np.arange(w * h, dtype=np.int64)
+             + GS_C * (f // GS_LEN)) % 256
+        ).astype(np.uint8)
+        for f in range(nf)
+    ]
+    return encode_gif_animation(w, h, frames, delay_cs=4)
 
 
 @query(
@@ -5100,36 +4392,26 @@ def mm_video_shot_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .gif import decode_gif_frames
 
-    src = spark.read.parquet(ensure_gif_shots_fixture(spark, sf_dir))
+    def shots(did, blob):
+        frames = decode_gif_frames(bytes(blob))
+        w, h = frames[0][0], frames[0][1]
+        stack = np.stack([f[2].astype(np.int64).reshape(-1) for f in frames])
+        sad = np.abs(np.diff(stack, axis=0)).sum(axis=1)
+        cuts = sad > GS_THRESH * w * h
+        yield {
+            "doc_id": did,
+            "n_frames": len(frames),
+            "n_shots": 1 + int(cuts.sum()),
+            "total_sad": int(sad.sum()),
+            "max_sad": int(sad.max()),
+            "first_cut_frame": int(np.argmax(cuts)) + 1 if cuts.any() else None,
+        }
 
-    def shots(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf["doc_id"], pdf["gif"]):
-                frames = decode_gif_frames(bytes(blob))
-                w, h = frames[0][0], frames[0][1]
-                stack = np.stack(
-                    [f[2].astype(np.int64).reshape(-1) for f in frames]
-                )
-                sad = np.abs(np.diff(stack, axis=0)).sum(axis=1)
-                cuts = sad > GS_THRESH * w * h
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_frames": len(frames),
-                        "n_shots": 1 + int(cuts.sum()),
-                        "total_sad": int(sad.sum()),
-                        "max_sad": int(sad.max()),
-                        "first_cut_frame": int(np.argmax(cuts)) + 1
-                        if cuts.any()
-                        else None,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "gif_shots_fixture")),
+        ["doc_id", "gif"],
         shots,
-        schema="doc_id long, n_frames long, n_shots long, total_sad long, "
+        "doc_id long, n_frames long, n_shots long, total_sad long, "
         "max_sad long, first_cut_frame long",
     )
 
@@ -5149,6 +4431,7 @@ PNV_IA, PNV_IB = 13, 5  # palette index of pixel i: (d*IA + i*IB) % 64
 PNV_PR, PNV_PG, PNV_PB = 17, 29, 41  # (k*Pc + c_mult*d) % 256, c_mult=1/2/3
 
 
+@_fixture("png_variants_fixture", "v1", "png")
 def _png_variant_fixture(doc_id: int) -> bytes:
     d = int(doc_id)
     w = PNV_W_BASE + d % PNV_W_MOD
@@ -5169,37 +4452,6 @@ def _png_variant_fixture(doc_id: int) -> bytes:
     )
     idx = bytes((d * PNV_IA + i * PNV_IB) % PNV_NPAL for i in range(w * h))
     return encode_png_ext(w, h, 1, idx, palette=pal, interlace=0 if v == 2 else 1)
-
-
-def ensure_png_variants_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of palette/Adam7 PNGs; corpus-scaled shards."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                pngs = [_png_variant_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "png": pngs})
-
-        ids.mapInPandas(gen, schema="doc_id long, png binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "png_variants_fixture",
-        "v1",
-        [table_path(sf_dir, "documents")],
-        build,
-    )
 
 
 @query(
@@ -5256,31 +4508,26 @@ def mm_decode_png_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape unchanged: Arrow-batched mapInPandas decode."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_png_variants_fixture(spark, sf_dir))
     names = ("gray_adam7", "rgb_adam7", "palette", "palette_adam7")
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, png in zip(pdf["doc_id"], pdf["png"]):
-                w, h, ch, px = _decode_png(bytes(png))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "variant": names[int(did) % 4],
-                        "width": w,
-                        "height": h,
-                        "channels": ch,
-                        "sum_bytes": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(did, png):
+        w, h, ch, px = _decode_png(bytes(png))
+        arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        yield {
+            "doc_id": did,
+            "variant": names[int(did) % 4],
+            "width": w,
+            "height": h,
+            "channels": ch,
+            "sum_bytes": int(arr.sum()),
+            "sum_sq": int((arr * arr).sum()),
+        }
 
-    return src.mapInPandas(
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "png_variants_fixture")),
+        ["doc_id", "png"],
         stats,
-        schema="doc_id long, variant string, width int, height int, "
+        "doc_id long, variant string, width int, height int, "
         "channels int, sum_bytes long, sum_sq long",
     )
 
@@ -5309,6 +4556,7 @@ def encode_wav_pcm(fmt_code: int, bits: int, payload: bytes, rate: int = 8000) -
     return b"RIFF" + struct.pack("<I", len(riff)) + riff
 
 
+@_fixture("pcm_depth_fixture", "v1", "wav")
 def _pcm_depth_fixture(doc_id: int) -> bytes:
     import numpy as np
 
@@ -5321,37 +4569,6 @@ def _pcm_depth_fixture(doc_id: int) -> bytes:
         return encode_wav_pcm(1, 24, payload)
     v = ((k % 513) - 256).astype(np.float64) / 256.0  # exact f4 dyadics
     return encode_wav_pcm(3, 32, v.astype("<f4").tobytes())
-
-
-def ensure_pcm_depth_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of 24-bit / float32 WAV clips."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                wavs = [_pcm_depth_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "wav": wavs})
-
-        ids.mapInPandas(gen, schema="doc_id long, wav binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "pcm_depth_fixture",
-        "v1",
-        [table_path(sf_dir, "documents")],
-        build,
-    )
 
 
 @query(
@@ -5386,33 +4603,27 @@ def mm_audio_pcm_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged: Arrow-batched mapInPandas decode."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_pcm_depth_fixture(spark, sf_dir))
+    def stats(did, wav):
+        _r, _c, s = decode_audio_np(bytes(wav))
+        if int(did) % 2 == 0:
+            a = s.astype(np.int64)
+            fmt = "pcm24"
+        else:
+            a = np.round(s.astype(np.float64) * 256.0).astype(np.int64)
+            fmt = "float32"
+        yield {
+            "doc_id": did,
+            "fmt": fmt,
+            "n_samples": int(len(a)),
+            "sum_amp": int(a.sum()),
+            "sum_sq": int((a * a).sum()),
+        }
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, wav in zip(pdf["doc_id"], pdf["wav"]):
-                _r, _c, s = decode_audio_np(bytes(wav))
-                if int(did) % 2 == 0:
-                    a = s.astype(np.int64)
-                    fmt = "pcm24"
-                else:
-                    a = np.round(s.astype(np.float64) * 256.0).astype(np.int64)
-                    fmt = "float32"
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "fmt": fmt,
-                        "n_samples": int(len(a)),
-                        "sum_amp": int(a.sum()),
-                        "sum_sq": int((a * a).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "pcm_depth_fixture")),
+        ["doc_id", "wav"],
         stats,
-        schema="doc_id long, fmt string, n_samples long, sum_amp long, "
+        "doc_id long, fmt string, n_samples long, sum_amp long, "
         "sum_sq long",
     )
 
@@ -5427,6 +4638,7 @@ BMI_IA, BMI_IB = 11, 7  # pixel i index: (d*IA + (i DIV rep)*IB) % 64
 BMI_PR, BMI_PG, BMI_PB = 19, 31, 43  # palette entry channels
 
 
+@_fixture("bmp_indexed_fixture", "v1", "bmp")
 def _bmp_indexed_fixture(doc_id: int) -> bytes:
     d = int(doc_id)
     w = BMI_W_BASE + d % BMI_W_MOD
@@ -5447,37 +4659,6 @@ def _bmp_indexed_fixture(doc_id: int) -> bytes:
     )
     return encode_bmp_indexed(
         w, h, idx, pal, rle=(v == 2), top_down=(v == 1)
-    )
-
-
-def ensure_bmp_indexed_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of 8-bit palette / RLE8 BMPs."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                bmps = [_bmp_indexed_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "bmp": bmps})
-
-        ids.mapInPandas(gen, schema="doc_id long, bmp binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "bmp_indexed_fixture",
-        "v1",
-        [table_path(sf_dir, "documents")],
-        build,
     )
 
 
@@ -5522,30 +4703,25 @@ def mm_decode_bmp_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape unchanged: Arrow-batched mapInPandas decode."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_bmp_indexed_fixture(spark, sf_dir))
     names = ("palette", "palette_topdown", "rle8")
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, bmp in zip(pdf["doc_id"], pdf["bmp"]):
-                w, h, ch, px = _decode_bmp(bytes(bmp))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "variant": names[int(did) % 3],
-                        "width": w,
-                        "height": h,
-                        "sum_bytes": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(did, bmp):
+        w, h, ch, px = _decode_bmp(bytes(bmp))
+        arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        yield {
+            "doc_id": did,
+            "variant": names[int(did) % 3],
+            "width": w,
+            "height": h,
+            "sum_bytes": int(arr.sum()),
+            "sum_sq": int((arr * arr).sum()),
+        }
 
-    return src.mapInPandas(
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "bmp_indexed_fixture")),
+        ["doc_id", "bmp"],
         stats,
-        schema="doc_id long, variant string, width int, height int, "
+        "doc_id long, variant string, width int, height int, "
         "sum_bytes long, sum_sq long",
     )
 
@@ -5603,7 +4779,7 @@ def mm_image_letterbox(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-size feature row per image."""
     import numpy as np
 
-    pngs = spark.read.parquet(ensure_png_fixture(spark, sf_dir))
+    pngs = spark.read.parquet(_binary_fixture(spark, sf_dir, "png_fixture"))
     S = LB_S
 
     def letterbox(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -5721,39 +4897,29 @@ def mm_video_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .gif import decode_gif_frames
 
-    src = spark.read.parquet(ensure_gif_shots_fixture(spark, sf_dir))
+    def keyframes(did, blob):
+        frames = decode_gif_frames(bytes(blob))
+        w, h = frames[0][0], frames[0][1]
+        stack = np.stack([f[2].astype(np.int64).reshape(-1) for f in frames])
+        sad = np.abs(np.diff(stack, axis=0)).sum(axis=1)
+        cuts = sad > GS_THRESH * w * h
+        shot_of = np.concatenate(([0], np.cumsum(cuts.astype(np.int64))))
+        for s in range(int(shot_of[-1]) + 1):
+            members = np.nonzero(shot_of == s)[0]
+            kf = int(members[0])
+            yield {
+                "doc_id": did,
+                "shot_id": s,
+                "key_frame": kf,
+                "shot_len": int(len(members)),
+                "key_luma_sum": int(stack[kf].sum()),
+            }
 
-    def keyframes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf["doc_id"], pdf["gif"]):
-                frames = decode_gif_frames(bytes(blob))
-                w, h = frames[0][0], frames[0][1]
-                stack = np.stack(
-                    [f[2].astype(np.int64).reshape(-1) for f in frames]
-                )
-                sad = np.abs(np.diff(stack, axis=0)).sum(axis=1)
-                cuts = sad > GS_THRESH * w * h
-                shot_of = np.concatenate(
-                    ([0], np.cumsum(cuts.astype(np.int64)))
-                )
-                for s in range(int(shot_of[-1]) + 1):
-                    members = np.nonzero(shot_of == s)[0]
-                    kf = int(members[0])
-                    rows.append(
-                        {
-                            "doc_id": did,
-                            "shot_id": s,
-                            "key_frame": kf,
-                            "shot_len": int(len(members)),
-                            "key_luma_sum": int(stack[kf].sum()),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "gif_shots_fixture")),
+        ["doc_id", "gif"],
         keyframes,
-        schema="doc_id long, shot_id long, key_frame long, shot_len long, "
+        "doc_id long, shot_id long, key_frame long, shot_len long, "
         "key_luma_sum long",
     )
 
@@ -5765,52 +4931,33 @@ AV_F_BASE, AV_F_MOD = 4, 4  # frames 4..7
 AV_A, AV_B, AV_C = 97, 31, 13  # block b of frame f: (d*A + f*B + b*C) % 256
 
 
-def ensure_avi_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture of REAL AVI/MJPEG videos — every frame a
-    genuine baseline JPEG muxed through the RIFF writer; corpus-scaled
-    shards."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
+def _avi_jpeg_frames(d: int) -> tuple[int, int, list[bytes]]:
+    """(blocks wide, blocks high, baseline-JPEG frames) of doc `d`'s
+    video stream — shared by both AVI fixtures."""
+    from .jpeg import encode_jpeg_blocks
 
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
+    bw = AV_BW_BASE + d % AV_BW_MOD
+    bh = AV_BH_BASE + d % AV_BH_MOD
+    nf = AV_F_BASE + d % AV_F_MOD
+    frames = [
+        encode_jpeg_blocks(
+            bw,
+            bh,
+            [(d * AV_A + f * AV_B + b * AV_C) % 256 for b in range(bw * bh)],
         )
+        for f in range(nf)
+    ]
+    return bw, bh, frames
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from .avi import encode_avi_mjpeg
-            from .jpeg import encode_jpeg_blocks
 
-            for pdf in batches:
-                blobs = []
-                for did in pdf["doc_id"]:
-                    d = int(did)
-                    bw = AV_BW_BASE + d % AV_BW_MOD
-                    bh = AV_BH_BASE + d % AV_BH_MOD
-                    nf = AV_F_BASE + d % AV_F_MOD
-                    frames = [
-                        encode_jpeg_blocks(
-                            bw,
-                            bh,
-                            [
-                                (d * AV_A + f * AV_B + b * AV_C) % 256
-                                for b in range(bw * bh)
-                            ],
-                        )
-                        for f in range(nf)
-                    ]
-                    blobs.append(encode_avi_mjpeg(bw * 8, bh * 8, frames))
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "avi": blobs})
+@_fixture("avi_fixture", "v1", "avi")
+def _avi_fixture(d: int) -> bytes:
+    """One REAL AVI/MJPEG video — every frame a genuine baseline JPEG
+    muxed through the RIFF writer."""
+    from .avi import encode_avi_mjpeg
 
-        ids.mapInPandas(gen, schema="doc_id long, avi binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "avi_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
+    bw, bh, frames = _avi_jpeg_frames(d)
+    return encode_avi_mjpeg(bw * 8, bh * 8, frames)
 
 
 @query(
@@ -5857,45 +5004,37 @@ def mm_decode_avi_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas, partitions scale with input splits at 100 TB."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_avi_fixture(spark, sf_dir))
+    from .avi import decode_avi_mjpeg
+    from .jpeg import decode_jpeg
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .avi import decode_avi_mjpeg
-        from .jpeg import decode_jpeg
+    def stats(did, blob):
+        d = decode_avi_mjpeg(bytes(blob))
+        sums = []
+        dims_ok = True
+        for jf in d["frames"]:
+            w, h, _n, planes = decode_jpeg(jf, components=True)
+            dims_ok = dims_ok and (w, h) == (d["hdr_w"], d["hdr_h"])
+            sums.append(int(planes[0].astype(np.int64).sum()))
+        consistent = int(
+            d["hdr_n_frames"] == len(d["frames"]) == d["n_idx1"]
+            and (d["hdr_w"], d["hdr_h"]) == (d["bmp_w"], d["bmp_h"])
+            and dims_ok
+        )
+        yield {
+            "doc_id": did,
+            "width": d["hdr_w"],
+            "height": d["hdr_h"],
+            "n_frames": len(d["frames"]),
+            "container_consistent": consistent,
+            "sum_lum": sum(sums),
+            "frame_weighted_lum": sum((f + 1) * s for f, s in enumerate(sums)),
+        }
 
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf["doc_id"], pdf["avi"]):
-                d = decode_avi_mjpeg(bytes(blob))
-                sums = []
-                dims_ok = True
-                for jf in d["frames"]:
-                    w, h, _n, planes = decode_jpeg(jf, components=True)
-                    dims_ok = dims_ok and (w, h) == (d["hdr_w"], d["hdr_h"])
-                    sums.append(int(planes[0].astype(np.int64).sum()))
-                consistent = int(
-                    d["hdr_n_frames"] == len(d["frames"]) == d["n_idx1"]
-                    and (d["hdr_w"], d["hdr_h"]) == (d["bmp_w"], d["bmp_h"])
-                    and dims_ok
-                )
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": d["hdr_w"],
-                        "height": d["hdr_h"],
-                        "n_frames": len(d["frames"]),
-                        "container_consistent": consistent,
-                        "sum_lum": sum(sums),
-                        "frame_weighted_lum": sum(
-                            (f + 1) * s for f, s in enumerate(sums)
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "avi_fixture")),
+        ["doc_id", "avi"],
         stats,
-        schema="doc_id long, width long, height long, n_frames long, "
+        "doc_id long, width long, height long, n_frames long, "
         "container_consistent long, sum_lum long, frame_weighted_lum long",
     ).orderBy("doc_id")
 
@@ -5907,68 +5046,28 @@ AV_SPF = 40
 AV_RATE = 8000
 
 
-def ensure_avi_av_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture of interleaved A/V AVIs — MJPEG video plus a
-    mono PCM16 `auds` stream, chunks interleaved 00dc/01wb per frame."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
+@_fixture("avi_av_fixture", "v1", "avi")
+def _avi_av_fixture(d: int) -> bytes:
+    """One interleaved A/V AVI — the MJPEG video of `_avi_fixture` plus
+    a mono PCM16 `auds` stream, chunks interleaved 00dc/01wb per frame."""
+    import numpy as np
 
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
+    from .avi import encode_avi_mjpeg
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np
-
-            from .avi import encode_avi_mjpeg
-            from .jpeg import encode_jpeg_blocks
-
-            for pdf in batches:
-                blobs = []
-                for did in pdf["doc_id"]:
-                    d = int(did)
-                    bw = AV_BW_BASE + d % AV_BW_MOD
-                    bh = AV_BH_BASE + d % AV_BH_MOD
-                    nf = AV_F_BASE + d % AV_F_MOD
-                    frames = [
-                        encode_jpeg_blocks(
-                            bw,
-                            bh,
-                            [
-                                (d * AV_A + f * AV_B + b * AV_C) % 256
-                                for b in range(bw * bh)
-                            ],
-                        )
-                        for f in range(nf)
-                    ]
-                    pcm = [
-                        (
-                            (
-                                (d * AVA_A + f * AVA_B
-                                 + np.arange(AV_SPF, dtype=np.int64) * AVA_C)
-                                % 4096
-                            )
-                            - 2048
-                        ).astype("<i2").tobytes()
-                        for f in range(nf)
-                    ]
-                    blobs.append(
-                        encode_avi_mjpeg(
-                            bw * 8, bh * 8, frames,
-                            pcm_frames=pcm, sample_rate=AV_RATE,
-                        )
-                    )
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "avi": blobs})
-
-        ids.mapInPandas(gen, schema="doc_id long, avi binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "avi_av_fixture", "v1", [table_path(sf_dir, "documents")], build
+    bw, bh, frames = _avi_jpeg_frames(d)
+    pcm = [
+        (
+            (
+                (d * AVA_A + f * AVA_B
+                 + np.arange(AV_SPF, dtype=np.int64) * AVA_C)
+                % 4096
+            )
+            - 2048
+        ).astype("<i2").tobytes()
+        for f in range(len(frames))
+    ]
+    return encode_avi_mjpeg(
+        bw * 8, bh * 8, frames, pcm_frames=pcm, sample_rate=AV_RATE
     )
 
 
@@ -6021,51 +5120,43 @@ def mm_decode_avi_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc work bounded by the blob. Reference analogue: none."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_avi_av_fixture(spark, sf_dir))
+    from .avi import decode_avi_interleaved
+    from .jpeg import decode_jpeg
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .avi import decode_avi_interleaved
-        from .jpeg import decode_jpeg
+    def stats(did, blob):
+        d = decode_avi_interleaved(bytes(blob))
+        nf = len(d["frames"])
+        vsum = 0
+        for jf in d["frames"]:
+            _w, _h, _n, planes = decode_jpeg(jf, components=True)
+            vsum += int(planes[0].astype(np.int64).sum())
+        a_abs = 0
+        a_fw = 0
+        for f, ab in enumerate(d["audio"]):
+            arr = np.abs(np.frombuffer(ab, dtype="<i2").astype(np.int64)).sum()
+            a_abs += int(arr)
+            a_fw += (f + 1) * int(arr)
+        ok = int(
+            d["order"] == ["v", "a"] * nf
+            and d["hdr_n_frames"] == nf == len(d["audio"])
+            and d["n_idx1"] == 2 * nf
+        )
+        yield {
+            "doc_id": did,
+            "n_frames": nf,
+            "n_audio_chunks": len(d["audio"]),
+            "interleave_ok": ok,
+            "audio_rate": d.get("audio_rate", 0),
+            "sum_lum": vsum,
+            "audio_sum_abs": a_abs,
+            "audio_fweighted": a_fw,
+        }
 
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf["doc_id"], pdf["avi"]):
-                d = decode_avi_interleaved(bytes(blob))
-                nf = len(d["frames"])
-                vsum = 0
-                for jf in d["frames"]:
-                    _w, _h, _n, planes = decode_jpeg(jf, components=True)
-                    vsum += int(planes[0].astype(np.int64).sum())
-                a_abs = 0
-                a_fw = 0
-                for f, ab in enumerate(d["audio"]):
-                    arr = np.abs(
-                        np.frombuffer(ab, dtype="<i2").astype(np.int64)
-                    ).sum()
-                    a_abs += int(arr)
-                    a_fw += (f + 1) * int(arr)
-                ok = int(
-                    d["order"] == ["v", "a"] * nf
-                    and d["hdr_n_frames"] == nf == len(d["audio"])
-                    and d["n_idx1"] == 2 * nf
-                )
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_frames": nf,
-                        "n_audio_chunks": len(d["audio"]),
-                        "interleave_ok": ok,
-                        "audio_rate": d.get("audio_rate", 0),
-                        "sum_lum": vsum,
-                        "audio_sum_abs": a_abs,
-                        "audio_fweighted": a_fw,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
+    return _per_row(
+        spark.read.parquet(_binary_fixture(spark, sf_dir, "avi_av_fixture")),
+        ["doc_id", "avi"],
         stats,
-        schema="doc_id long, n_frames long, n_audio_chunks long, "
+        "doc_id long, n_frames long, n_audio_chunks long, "
         "interleave_ok long, audio_rate long, sum_lum long, "
         "audio_sum_abs long, audio_fweighted long",
     ).orderBy("doc_id")

@@ -192,60 +192,45 @@ def _data_file_count(path: str) -> int:
     return n
 
 
-def test_fixture_artifacts_are_sharded(spark):
+@pytest.mark.slow
+def test_fixture_artifacts_are_sharded(spark, tmp_path, monkeypatch):
     """Shard-count regression guard (VERDICT r8 next-round #5): the 30x
     probe twice caught 1-2-file fixture tables serializing an entire
     decode family (decode parallelism is pinned to the file count — the
-    one-mapper trap). Every committed binary-fixture artifact must carry
+    one-mapper trap). Every entry of the binary fixture table must build
     at least the 8-file floor of `_fixture_shards`, so a future builder
     edit that drops the repartition fails HERE instead of in a 10x bench.
-    A deliberately unsharded artifact is the red-path control."""
-    from parquet_storage_query_spark import cache
+    The builds go to a fresh index dir with the memo cleared (it is keyed
+    by tag and digest, not by dir), so the builder runs instead of a
+    committed copy being served. A deliberately unsharded artifact is the
+    red-path control."""
     from parquet_storage_query_spark.operators.multimodal import (
-        ensure_adpcm_fixture,
-        ensure_bmp_fixture,
-        ensure_flac_fixture,
-        ensure_g711_fixture,
-        ensure_gif_anim_fixture,
-        ensure_gif_fixture,
-        ensure_gif_shots_fixture,
-        ensure_jpeg420_fixture,
-        ensure_jpeg_arith_fixture,
-        ensure_jpeg_fixture,
-        ensure_jpeg_progressive_fixture,
-        ensure_png_fixture,
-        ensure_tiff_fixture,
-        ensure_wav_fixture,
+        _FIXTURES,
+        _binary_fixture,
     )
 
-    for ensure in (
-        ensure_adpcm_fixture,
-        ensure_bmp_fixture,
-        ensure_png_fixture,
-        ensure_jpeg_fixture,
-        ensure_jpeg420_fixture,
-        ensure_jpeg_progressive_fixture,
-        ensure_jpeg_arith_fixture,
-        ensure_flac_fixture,
-        ensure_g711_fixture,
-        ensure_gif_anim_fixture,
-        ensure_gif_fixture,
-        ensure_gif_shots_fixture,
-        ensure_tiff_fixture,
-        ensure_wav_fixture,
-    ):
-        dest = ensure(spark, SF_SMOKE)
-        n = _data_file_count(dest)
-        assert n >= 8, f"{ensure.__name__}: only {n} data files (one-mapper trap)"
+    idx = tmp_path / "idx"
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(idx))
+    _clear_memo()
+    try:
+        assert len(_FIXTURES) >= 26
+        for tag in _FIXTURES:
+            dest = _binary_fixture(spark, SF_SMOKE, tag)
+            assert dest.startswith(str(idx)), f"{tag}: served {dest}, not built"
+            n = _data_file_count(dest)
+            assert n >= 8, f"{tag}: only {n} data files (one-mapper trap)"
 
-    # red-path control: an unsharded artifact must FAIL the predicate
-    def build_unsharded(dest: str) -> None:
-        spark.range(10).coalesce(1).write.mode("overwrite").parquet(dest)
+        # red-path control: an unsharded artifact must FAIL the predicate
+        def build_unsharded(dest: str) -> None:
+            spark.range(10).coalesce(1).write.mode("overwrite").parquet(dest)
 
-    dest = cache.ensure_artifact(
-        spark, SF_SMOKE, "unsharded_control", "v1", [], build_unsharded
-    )
-    assert _data_file_count(dest) < 8, "control should be unsharded"
+        dest = cache.ensure_artifact(
+            spark, SF_SMOKE, "unsharded_control", "v1", [], build_unsharded
+        )
+        assert _data_file_count(dest) < 8, "control should be unsharded"
+    finally:
+        # later tests must not be served paths under this test's tmp dir
+        _clear_memo()
 
 
 def test_session_table_gc_drops_and_prunes(spark, tmp_path):
