@@ -1,6 +1,8 @@
 """Session-scoped memoization for expensive per-(session, sf_dir) artifacts:
-persisted signature DataFrames (dedup), trained centroid models (IVF),
-temp-view registration (SQL builders).
+materialized intermediates (``session_frame``, the one way a session keeps
+a DataFrame), trained centroid models (IVF), prepared query plans
+(``prepared``), temp-view registration (SQL builders), and committed
+on-disk artifacts (``ensure_artifact``).
 
 Keyed on ``SparkContext.applicationId`` — unique per context for the life of
 the process — NOT ``id(SparkSession)``: a new session can be allocated at a
@@ -60,34 +62,43 @@ def session_memo(spark: SparkSession, sf_dir: str, tag: str, build: Callable[[],
         return value
 
 
-def scratch_dir(spark: SparkSession, sf_dir: str, prefix: str) -> str:
-    """A per-(application, sf_dir) scratch path for demo artifacts
-    (standing indexes, staged stream shards) under $SPARK_GRAFT_INDEX_DIR
-    or the system temp dir: `{prefix}_{md5(sf_dir)[:8]}_{applicationId}`.
+def session_frame(
+    spark: SparkSession, sf_dir: str, tag: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """The session-held frame for (this session, sf_dir, tag). ``build()``
+    returns an unmaterialized plan; it is materialized once and memoized
+    through ``session_memo``, under the same per-key lock, so concurrent
+    callers still build once. The materialization policy lives in this
+    one function: an eager ``localCheckpoint``, which computes the frame
+    now and cuts its lineage to a scan of the cached blocks. Checkpoints
+    that serve a single query stay direct Spark calls.
 
-    The applicationId suffix is the isolation: two concurrent sessions
-    over the same sf_dir never overwrite each other (a shared fixed path
-    raced — one session's overwrite rmtree'd a directory the other was
-    serving from). Stale sibling app dirs (same prefix+digest, mtime
-    older than a day) are pruned on the way in, so repeated sessions
-    don't accumulate one dir each forever."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import time
+    No memo build checkpoints directly, nor does a helper defined beside
+    it (``tests/test_session_frames.py`` checks both). Two module-level
+    helpers that take an arbitrary frame, so have no (sf_dir, tag) key,
+    still do, and a memoized plan keeps their result for the session:
+    ``dedup.connected_components`` (last round's labels, kept by
+    ``dedup_clusters``) and ``dedup.incremental_pairs`` (the new batch's
+    signatures, kept by ``dedup_incremental``)."""
+    return session_memo(spark, sf_dir, tag, lambda: build().localCheckpoint(eager=True))
 
-    base = os.environ.get("SPARK_GRAFT_INDEX_DIR") or os.path.join(
-        tempfile.gettempdir(), "spark_graft_indexes"
-    )
-    stem = f"{prefix}_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    os.makedirs(base, exist_ok=True)
-    cutoff = time.time() - 24 * 3600
-    for d in os.listdir(base):
-        p = os.path.join(base, d)
-        if d.startswith(stem + "_") and os.path.isdir(p) and os.path.getmtime(p) < cutoff:
-            shutil.rmtree(p, ignore_errors=True)
-    return os.path.join(base, f"{stem}_{spark.sparkContext.applicationId}")
+
+def derived_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
+    """A session on ``spark``'s SparkContext whose own SQLConf carries
+    ``confs``, for queries whose confs must not leak into the shared
+    session. One per (application, conf set): a fresh ``newSession()``
+    per call starts from empty session state, and its first plan paid up
+    to 45 ms more than a reused one (footer count at sf0.01). The session
+    is memoized, never a DataFrame read through it: a memoized read would
+    freeze its file listing."""
+
+    def build() -> SparkSession:
+        ns = spark.newSession()
+        for k, v in confs.items():
+            ns.conf.set(k, v)
+        return ns
+
+    return session_memo(spark, "", f"derived_session:{sorted(confs.items())}", build)
 
 
 COMMIT_MARKER = "_COMMITTED"
@@ -235,7 +246,7 @@ def register_session_table(spark: SparkSession, name: str, stem: str) -> None:
     warehouse copy per table per run — nontrivial disk growth across
     bench rounds at sf1 (ADVICE r7).
 
-    Two complementary sweeps, mirroring scratch_dir's policy:
+    Two complementary sweeps:
     - atexit: DROP TABLE IF EXISTS for every table THIS session created
       (removes both the in-memory catalog entry and the warehouse files)
       — the normal path.

@@ -196,6 +196,13 @@ def _ts_is_nanos(path: str, ts_col: str) -> bool:
     return result
 
 
+def _nanos_col(path: str, name: str) -> str | None:
+    """The column this table's files store as TIMESTAMP(NANOS), if any;
+    such a table is read with `_raw_read_schema` under nanosAsLong."""
+    ts_col = _NANOS_TS.get(name)
+    return ts_col if ts_col and _ts_is_nanos(path, ts_col) else None
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Folder-of-parquet → DataFrame (reference: per-query DataFolderUri)."""
     path = table_path(sf_dir, name)
@@ -208,8 +215,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from .pkgship import ship_package
 
     ship_package(spark)
-    ts_col = _NANOS_TS.get(name)
-    if ts_col is None or not _ts_is_nanos(path, ts_col):
+    ts_col = _nanos_col(path, name)
+    if ts_col is None:
         return spark.read.schema(SCHEMAS[name]).parquet(path)
     _ensure_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.schema(_raw_read_schema(name)).parquet(path)
@@ -252,9 +259,7 @@ def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def load_stream(spark: SparkSession, sf_dir: str, name: str, max_files_per_trigger: int = 1) -> DataFrame:
     """Structured Streaming file-source twin of `load` (same schema fixes)."""
     path = table_path(sf_dir, name)
-    ts_col = _NANOS_TS.get(name)
-    if ts_col and not _ts_is_nanos(path, ts_col):
-        ts_col = None
+    ts_col = _nanos_col(path, name)
     schema = _raw_read_schema(name) if ts_col else SCHEMAS[name]
     if ts_col:
         _ensure_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -293,14 +298,25 @@ def register_all(spark: SparkSession, sf_dir: str) -> None:
     _REGISTERED = key
 
 
+_FOOTER_CONFS = {
+    "spark.sql.parquet.aggregatePushdown": "true",
+    "spark.sql.sources.useV1SourceList": "",
+    # nanos timestamps (events.parquet) are irrelevant to a footer count,
+    # but the raw read schema still resolves the column as INT64
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
 def metadata_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """A scan wired for FOOTER-ONLY aggregation (COUNT/MIN/MAX on supported
     types) — no row group is decoded when the plan is aggregate-only.
-    Uses a derived session (same SparkContext, own SQLConf)
-    with the DataSource V2 parquet reader + aggregate pushdown, because
-    those confs are session-wide and the main session stays on the
-    default reader for every other query. The plan shows
+    Uses a derived session (same SparkContext, own SQLConf, one per
+    application) with the DataSource V2 parquet reader + aggregate
+    pushdown, because those confs are session-wide and the main session
+    stays on the default reader for every other query. The plan shows
     `PushedAggregation: [COUNT(*)]` (tests/test_plans.py asserts it).
+    The schema is the one `load` reads with: inferring it from the
+    footers cost ~100 ms per call.
 
     At 100 TB this is the difference between scanning the corpus and
     reading ~10⁵ footers: the reference's A1 TotalCount
@@ -308,10 +324,9 @@ def metadata_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     blob — this is the same idea executed at the metadata layer. Only
     valid without filters/projections (Spark falls back to a scan the
     moment either appears, same answer either way)."""
-    ns = spark.newSession()
-    ns.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    ns.conf.set("spark.sql.sources.useV1SourceList", "")
-    # nanos timestamps (events.parquet) are irrelevant to a footer count,
-    # but the schema still resolves at read time
-    ns.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return ns.read.parquet(f"{sf_dir}/{name}.parquet")
+    from .cache import derived_session
+
+    ns = derived_session(spark, _FOOTER_CONFS)
+    path = table_path(sf_dir, name)
+    schema = _raw_read_schema(name) if _nanos_col(path, name) else SCHEMAS[name]
+    return ns.read.schema(schema).parquet(path)

@@ -816,9 +816,9 @@ def aqe_skew_agg(spark: SparkSession, sf_dir: str):
     2 KB advisory partitions). Returns (derived_session, unexecuted agg);
     the registered query executes it eagerly, the plan pin inspects the
     final adaptive plan for the skew=true rewrite."""
-    ns = spark.newSession()
-    for k, v in AQE_SKEW_CONFS.items():
-        ns.conf.set(k, v)
+    from ..cache import derived_session
+
+    ns = derived_session(spark, AQE_SKEW_CONFS)
     ev = load(ns, sf_dir, "events")
     fact = ev.select(
         F.when(F.col("event_id") % 10 < 9, F.lit(0).cast("long"))
@@ -958,16 +958,15 @@ def prep_binpack_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-FILE footer metadata; this query demonstrates the same binning at
     document grain, where a 100 TB corpus is billions of rows — the old
     single-partition window would put all of them through one task)."""
-    from ..cache import session_memo
+    from ..cache import session_frame
 
-    def _base() -> DataFrame:
-        return (
-            load(spark, sf_dir, "documents")
-            .select("doc_id", "n_chars")
-            .localCheckpoint(eager=True)  # one corpus scan feeds all 3 jobs
-        )
-
-    base = session_memo(spark, sf_dir, "binpack_base_documents", _base)
+    # one corpus scan feeds all 3 jobs
+    base = session_frame(
+        spark,
+        sf_dir,
+        "binpack_base_documents",
+        lambda: load(spark, sf_dir, "documents").select("doc_id", "n_chars"),
+    )
     lo, hi = base.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
     n_buckets = 32
     span = max(1, -(-(int(hi) - int(lo) + 1) // n_buckets))  # ceil
@@ -1216,6 +1215,24 @@ def prep_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _hll_type_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-event_type HLL sketch table (lgConfigK=12), read by both the
+    serving query and its audit twin."""
+    from ..cache import session_frame
+
+    return session_frame(
+        spark,
+        sf_dir,
+        "hll_type_sketches",
+        lambda: load_parallel(spark, sf_dir, "events")
+        .groupBy("event_type")
+        .agg(
+            F.hll_sketch_agg("user_id", F.lit(12)).alias("sk"),
+            F.count(F.lit(1)).alias("n_events"),
+        ),
+    )
+
+
 @query("agg_hll_sketch", oracle=None)  # sketch estimates are engine-specific
 def agg_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable HyperLogLog sketches (Apache DataSketches, built into Spark):
@@ -1227,29 +1244,13 @@ def agg_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the materialized-rollup contract at 100 TB: persist per-shard /
     per-day sketches (bytes each), answer any distinct-count over any shard
     union by merging sketches. The per-type sketch table IS materialized
-    here (eager localCheckpoint, memoized per session): without it the
-    per-group branch and the merged-ALL branch each re-scanned the input —
-    2× the scan cost at any scale; with it the input is scanned once and
-    both branches read a groups-sized table. Estimate accuracy is set by
+    here: without it the per-group branch and the merged-ALL branch each
+    re-scanned the input — 2× the scan cost at any scale; with it the
+    input is scanned once and both branches read a groups-sized table. Estimate accuracy is set by
     lgConfigK=12 (~2% rel. err). Rows-only check: sketch estimates are
     engine-specific by construction; tests/test_correctness.py asserts the
     estimates land within tolerance of the exact counts."""
-    from ..cache import session_memo
-
-    per_type = session_memo(
-        spark,
-        sf_dir,
-        "hll_type_sketches",
-        lambda: (
-            load_parallel(spark, sf_dir, "events")
-            .groupBy("event_type")
-            .agg(
-                F.hll_sketch_agg("user_id", F.lit(12)).alias("sk"),
-                F.count(F.lit(1)).alias("n_events"),
-            )
-            .localCheckpoint(eager=True)
-        ),
-    )
+    per_type = _hll_type_sketches(spark, sf_dir)
     merged = per_type.agg(
         F.hll_union_agg("sk").alias("sk"), F.sum("n_events").alias("n_events")
     ).select(F.lit("ALL").alias("event_type"), "sk", "n_events")
@@ -1281,22 +1282,10 @@ def agg_hll_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate is a deterministic function of the data, so a green row is
     pinned, not sampled. Oracle replays exact counts and asserts the
     verdict; sketch drift turns the row hash-red."""
-    from ..cache import session_memo
+    from ..cache import session_frame
 
     ev = load_parallel(spark, sf_dir, "events")
-    per_type = session_memo(
-        spark,
-        sf_dir,
-        "hll_type_sketches",
-        lambda: (
-            ev.groupBy("event_type")
-            .agg(
-                F.hll_sketch_agg("user_id", F.lit(12)).alias("sk"),
-                F.count(F.lit(1)).alias("n_events"),
-            )
-            .localCheckpoint(eager=True)
-        ),
-    )
+    per_type = _hll_type_sketches(spark, sf_dir)
     merged = per_type.agg(
         F.hll_union_agg("sk").alias("sk"), F.sum("n_events").alias("n_events")
     ).select(F.lit("ALL").alias("event_type"), "sk", "n_events")
@@ -1307,15 +1296,11 @@ def agg_hll_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partials first (the only shuffle that touches event rows), then both
     # the per-type and the global-ALL exact counts aggregate the PAIRS
     # table — the plan-audit rescan smell the first cut had is gone
-    pairs = session_memo(
+    pairs = session_frame(
         spark,
         sf_dir,
         "hll_audit_pairs",
-        lambda: (
-            ev.groupBy("event_type", "user_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        ),
+        lambda: ev.groupBy("event_type", "user_id").agg(F.count(F.lit(1)).alias("n")),
     )
     exact = (
         pairs.groupBy("event_type")
@@ -1996,22 +1981,21 @@ def prep_partitioned_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmv_distinct_hashes(spark: SparkSession, sf_dir: str, etype: str) -> DataFrame:
-    """One event type's distinct md5 user-hash set, materialized once per
-    session (eager localCheckpoint) — the shared input of EVERY KMV
-    set-algebra leg (distinct / overlap / difference): each side's
-    reduction runs once no matter how many sketch readouts consume it."""
-    from ..cache import session_memo
+    """One event type's distinct md5 user-hash set — the shared input of
+    EVERY KMV set-algebra leg (distinct / overlap / difference): each
+    side's reduction runs once no matter how many sketch readouts
+    consume it."""
+    from ..cache import session_frame
     from .dedup import md5_i64
 
     ev = load_parallel(spark, sf_dir, "events")
-    return session_memo(
+    return session_frame(
         spark,
         sf_dir,
         f"kmv_hashes_{etype}",
         lambda: ev.filter(F.col("event_type") == etype)
         .select(md5_i64(F.col("user_id").cast("string")).alias("h"))
-        .distinct()
-        .localCheckpoint(eager=True),
+        .distinct(),
     )
 
 
@@ -2244,6 +2228,14 @@ def source_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The `lang` key domain: 5 values (de, en, es, fr, zh) at sf0.001, sf0.01
+# and sf0.1, so 1 state partition. Measured on this query (local[4], 8
+# alternating pairs each at sf0.01 and sf0.1): 8 partitions summed ~1.9 s
+# of state-store commits per run against ~0.09 s for 1, and cost ~1.7 s
+# more CPU, for the same 5 rows.
+LANG_DOMAIN_BOUND = 5
+
+
 @query(
     "source_jsonl_stream",
     oracle="""
@@ -2303,10 +2295,9 @@ def source_jsonl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.length("text")).alias("total_len"),
         )
     )
-    # per-lang rollup: the key domain is the language set (single digits
-    # here, dozens on any real corpus) — one state partition holds it at
-    # any scale; map-side partial aggregation already reduces each task
-    # to O(langs) rows before the exchange (guide §2.4)
+    # per-lang rollup: map-side partial aggregation reduces each task to
+    # O(langs) rows before the exchange (guide §2.4), so the state
+    # partitions are sized from the language domain, not the corpus
     from ..streaming.windows import _state_partitions
 
     return (
@@ -2314,7 +2305,7 @@ def source_jsonl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             agg,
             "source_jsonl_stream_out",
             "complete",
-            partitions=_state_partitions(spark, keys=8),
+            partitions=_state_partitions(spark, keys=LANG_DOMAIN_BOUND),
         )
         .orderBy("lang")
     )
@@ -3205,16 +3196,17 @@ def agg_exact_median_2pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram), which is how a 100 TB percentile dashboard stays
     O(passes), not O(quantiles) — the exact-answer complement of
     agg_sampled_percentiles / agg_approx_percentiles."""
-    from ..cache import session_memo
+    from ..cache import session_frame
 
-    def base() -> DataFrame:
-        return (
-            load_parallel(spark, sf_dir, "lineitem")
-            .select(F.round(F.col("l_extendedprice") * 100).cast("long").alias("v"))
-            .localCheckpoint(eager=True)  # one corpus scan feeds all 3 jobs
-        )
-
-    t = session_memo(spark, sf_dir, "median2p_values", base)
+    # one corpus scan feeds all 3 jobs
+    t = session_frame(
+        spark,
+        sf_dir,
+        "median2p_values",
+        lambda: load_parallel(spark, sf_dir, "lineitem").select(
+            F.round(F.col("l_extendedprice") * 100).cast("long").alias("v")
+        ),
+    )
     stats = t.agg(
         F.count(F.lit(1)).alias("n"), F.min("v").alias("lo"), F.max("v").alias("hi")
     ).collect()[0]
@@ -3538,19 +3530,16 @@ def agg_grouped_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the direct per-group ranked definition — DuckDB can
     afford the full sort at gate scale, which is the point of the
     differential: same answer, scalable plan."""
-    from ..cache import session_memo
+    from ..cache import session_frame
 
-    def base() -> DataFrame:
-        return (
-            load(spark, sf_dir, "events")
-            .select(
-                "event_type",
-                F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    t = session_memo(spark, sf_dir, "grouped_median_values", base)
+    t = session_frame(
+        spark,
+        sf_dir,
+        "grouped_median_values",
+        lambda: load(spark, sf_dir, "events").select(
+            "event_type", F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents")
+        ),
+    )
     stats = t.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.min("cents").alias("lo"),
@@ -3612,21 +3601,20 @@ def _daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily order-revenue cents keyed by day index from the 1995-01-01
     anchor — ONE corpus scan checkpointed at O(days) rows, session-shared
     by timeseries_acf and timeseries_changepoint_cusum."""
-    from ..cache import session_memo
+    from ..cache import session_frame
 
-    def build() -> DataFrame:
-        return (
-            load(spark, sf_dir, "orders")
-            .groupBy(
-                F.datediff(
-                    F.date_trunc("day", "o_orderdate"), F.to_date(F.lit("1995-01-01"))
-                ).alias("t")
-            )
-            .agg(F.sum(F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")).alias("x"))
-            .localCheckpoint(eager=True)
+    return session_frame(
+        spark,
+        sf_dir,
+        "acf_daily_revenue",
+        lambda: load(spark, sf_dir, "orders")
+        .groupBy(
+            F.datediff(
+                F.date_trunc("day", "o_orderdate"), F.to_date(F.lit("1995-01-01"))
+            ).alias("t")
         )
-
-    return session_memo(spark, sf_dir, "acf_daily_revenue", build)
+        .agg(F.sum(F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")).alias("x")),
+    )
 
 
 @query(
@@ -5057,7 +5045,7 @@ def ensure_bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     orderkey into catalog tables (bucket metadata lives in the catalog,
     not the parquet footers, so saveAsTable is required). Table names
     carry the sf digest AND applicationId — two concurrent sessions never
-    overwrite each other's buckets (the scratch_dir isolation rule)."""
+    overwrite each other's buckets."""
     import hashlib
     import re
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import prepared, session_memo
+from ..cache import prepared, session_frame, session_memo
 from ..catalog import load, load_parallel
 from ..functions.vectors import as_double, cosine, dot
 from ..registry import query
@@ -272,19 +272,16 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
 
 def minhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus signature table (doc_id, hs, sig) as a SHARED
-    per-(session, sf_dir) artifact: computed once, eagerly
-    localCheckpoint-ed (the serving plans scan a cached RDD instead of
-    re-running the shingle+32-fold pipeline per consumer branch — the
-    containment query alone has five subtrees that would each recompute
-    it). At cluster scale this is the signature staging table both the
-    LSH dedup and the containment dedup read."""
-    return session_memo(
+    per-(session, sf_dir) frame, computed once (the serving plans scan a
+    cached RDD instead of re-running the shingle+32-fold pipeline per
+    consumer branch — the containment query alone has five subtrees that
+    would each recompute it). At cluster scale this is the signature
+    staging table both the LSH dedup and the containment dedup read."""
+    return session_frame(
         spark,
         sf_dir,
         "minhash_docs",
-        lambda: minhash_signatures(
-            load_parallel(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=True),
+        lambda: minhash_signatures(load_parallel(spark, sf_dir, "documents")),
     )
 
 
@@ -1067,7 +1064,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cos_lsh_index(spark: SparkSession, sf_dir: str, e: DataFrame | None = None) -> DataFrame:
+def cos_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The banded hyperplane index as a shared per-session artifact:
     (vec_id, band, bucket, v, n) — n is the PRECOMPUTED L2 norm, so the
     per-collision verify in both consumers is one dot-product fold instead
@@ -1075,18 +1072,14 @@ def cos_lsh_index(spark: SparkSession, sf_dir: str, e: DataFrame | None = None) 
     cost at sf0.1). n = sqrt(dot(v, v)) with the identical fold the inline
     cosine used, so cos = dot/(n_a·n_b) is bit-identical to the oracle's
     replay. Pre-partitioned on the (band, bucket) join key (drops both
-    pre-join exchanges) and EAGERLY localCheckpoint-ed — truncating the
-    lineage to a cached-RDD scan so serving plans are tiny. ONE index
+    pre-join exchanges) and materialized once per session — truncating
+    the lineage to a cached-RDD scan so serving plans are tiny. ONE index
     serves both the near-dup self-join (dedup_embedding_cosine) and the
     top-k probe join (sim_lsh_topk) — the multi-consumer payoff of
     materializing the banding."""
     from ..functions.vectors import l2_norm
 
-    if e is None:
-        e = load_parallel(spark, sf_dir, "embeddings").select(
-            "vec_id", as_double("embedding").alias("v")
-        )
-    return session_memo(
+    return session_frame(
         spark,
         sf_dir,
         "cos_lsh_bands_v",
@@ -1094,14 +1087,16 @@ def cos_lsh_index(spark: SparkSession, sf_dir: str, e: DataFrame | None = None) 
         # banding, so the old join-back-on-vec_id (which re-executed the
         # whole band-keys subtree under the checkpoint) is gone: one scan,
         # one repartition on the join key, one materialization.
-        lambda: lsh_band_keys_v(e.withColumn("n", l2_norm(F.col("v"))))
-        .repartition(F.col("band"), F.col("bucket"))
-        .localCheckpoint(eager=True),
+        lambda: lsh_band_keys_v(
+            load_parallel(spark, sf_dir, "embeddings")
+            .select("vec_id", as_double("embedding").alias("v"))
+            .withColumn("n", l2_norm(F.col("v")))
+        ).repartition(F.col("band"), F.col("bucket")),
     )
 
 
 def _build_cos_lsh_query(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame:
-    bands = cos_lsh_index(spark, sf_dir, e)
+    bands = cos_lsh_index(spark, sf_dir)
     # scale guard (memoized with the serving query): at 0.45 on this corpus
     # the budget ENGAGES — but B=128 exceeds every bench-SF bucket, so the
     # oracle hash is unchanged while the 10×+ verify is bounded.
@@ -1215,7 +1210,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "h")
     )
     a, b = rare_occ.alias("a"), rare_occ.alias("b")
-    # candidate-pair table materialized once (eager checkpoint): the
+    # candidate-pair table materialized once per session: the
     # posting self-join + pair aggregation is the dominant serving term
     # (~3s/serve re-run without the checkpoint — checkpointing only
     # rare_occ still re-joined per serve). The CONTAIN_MIN_SHARED
@@ -1225,13 +1220,17 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # O(n · C(cap, 2)) pair-count rows pre-filter — linear in corpus size
     # because the posting cap bounds each shingle's fan-out — and serving
     # reduces to the verify join against the surviving pairs.
-    cand = (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+    cand = session_frame(
+        spark,
+        sf_dir,
+        "containment_cand",
+        lambda: a.join(
+            b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id"))
+        )
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_shared_rare"))
         .filter(F.col("n_shared_rare") >= CONTAIN_MIN_SHARED)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
+        .select("doc_a", "doc_b"),
     )
     scored = (
         cand.join(docs.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a")), "doc_a")
@@ -1583,11 +1582,12 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_dedup_synthetic.py (the serving plan scans the index
     parquet, never the historical documents).
 
-    Index location: cache.scratch_dir — $SPARK_GRAFT_INDEX_DIR (else the
-    system temp dir), keyed by sf_dir digest + applicationId (concurrent
-    sessions never race on one path) with day-old sibling dirs pruned.
-    On a real cluster this would be a shared filesystem/object-store
-    prefix; the env var is that knob."""
+    Index location: `ensure_demo_index` → `cache.ensure_artifact` — a
+    committed dir under $SPARK_GRAFT_INDEX_DIR (else the system temp
+    dir) named by a digest of the documents' files, so concurrent
+    sessions share one committed copy and a regenerated corpus maps to a
+    new path. On a real cluster this would be a shared filesystem/object-
+    store prefix; the env var is that knob."""
     def build() -> DataFrame:
         dest = ensure_demo_index(spark, sf_dir)
         new = (
@@ -2052,14 +2052,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens at pair time — fingerprints were already folded once);
     candidates come from a (band, key) equi-join; nothing quadratic.
     md5-seeded bit votes make the whole pipeline DuckDB-replayable."""
-    from ..cache import session_memo
-
-    sims = session_memo(
-        spark,
-        sf_dir,
-        "simhash_fps",
-        lambda: dedup_simhash(spark, sf_dir).localCheckpoint(eager=True),
-    )
+    sims = session_frame(spark, sf_dir, "simhash_fps", lambda: dedup_simhash(spark, sf_dir))
     bnd = sims.select(
         "doc_id",
         "simhash",
@@ -2370,25 +2363,19 @@ def _build_setsim_query(
     # the checkpointed shingle table is shared between the exact and the
     # capped variants (r11: the two queries rebuilt it independently —
     # the single largest serving cost in BENCH_DETAIL at 7.1s + 5.4s)
-    docs = session_memo(
+    docs = session_frame(
         spark,
         sf_dir,
         "setsim_docs",
         lambda: load_parallel(spark, sf_dir, "documents")
         .select("doc_id", words_col().alias("ws"))
-        .select("doc_id", F.expr(_SHINGLES).alias("sh"))
-        .localCheckpoint(eager=True),
+        .select("doc_id", F.expr(_SHINGLES).alias("sh")),
     )
     # the UNguarded exploded prefix (O(docs × prefix_len) rows, ≪ tok) is
     # shared between the exact and capped variants too; the guard/cap is
     # variant-specific and applies downstream of the checkpoint
     pre = setsim_density_guard(
-        session_memo(
-            spark,
-            sf_dir,
-            "setsim_pre_raw",
-            lambda: setsim_prefix_plan(docs).localCheckpoint(eager=True),
-        ),
+        session_frame(spark, sf_dir, "setsim_pre_raw", lambda: setsim_prefix_plan(docs)),
         budget=budget,
         force=force,
     )

@@ -980,12 +980,11 @@ def events_rfm_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic after one user-keyed rollup; the band census then folds
     to ≤64 rows. "Now" is the corpus max-ts, recovered from the SAME
     user rollup (max of per-user maxima — one corpus scan total: the
-    O(users) rollup is materialized once via the suite's
-    localCheckpoint/session_memo prepared-view pattern, q15-style,
+    O(users) rollup is materialized once per session, q15-style,
     because it feeds both the census and its own 1-row "now" scalar and
     Catalyst does not reuse the exchange across the two consumers).
     Integer cents and integer day arithmetic end to end."""
-    from ..cache import session_memo
+    from ..cache import session_frame
 
     def _per_user() -> DataFrame:
         ev = load(spark, sf_dir, "events")
@@ -1005,10 +1004,9 @@ def events_rfm_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
                 ).alias("last_day"),
             )
-            .localCheckpoint(eager=True)
         )
 
-    per_user = session_memo(spark, sf_dir, "rfm_per_user_view", _per_user)
+    per_user = session_frame(spark, sf_dir, "rfm_per_user_view", _per_user)
     now_t = per_user.agg(F.date_trunc("day", F.max("any_last")).alias("now_day"))
     u = (
         per_user.filter(F.col("f") > 0)
@@ -1556,7 +1554,7 @@ def stream_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     consistent like the Gini value buckets): per-bucket exclusive
     prefix-max + ≤B collected bucket maxima as cross-bucket offsets.
     Lateness is exact integer µs; shares are e6 DIVs."""
-    from ..cache import session_memo
+    from ..cache import session_frame
 
     def _base() -> DataFrame:
         return (
@@ -1570,10 +1568,10 @@ def stream_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"% {_WM_MAX_DELAY_S}) * 1000000L"
                 ).alias("arrival_us"),
             )
-            .localCheckpoint(eager=True)  # one corpus scan feeds all 3 jobs
         )
 
-    base = session_memo(spark, sf_dir, "wm_arrival_replay", _base)
+    # one corpus scan feeds all 3 jobs
+    base = session_frame(spark, sf_dir, "wm_arrival_replay", _base)
     lo, hi = base.agg(F.min("arrival_us"), F.max("arrival_us")).collect()[0]
     span = max(1, -(-(int(hi) - int(lo) + 1) // _WM_BUCKETS))
     bucketed = base.withColumn(

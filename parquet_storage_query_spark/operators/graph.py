@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import session_memo
+from ..cache import session_frame, session_memo
 from ..catalog import load
 from ..registry import query
 from .dedup import _MH_JACCARD_TAIL, _mh_duck_ctes
@@ -52,10 +52,9 @@ def _neardup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionAll(
                 pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
             )
-            .localCheckpoint(eager=True)
         )
 
-    return session_memo(spark, sf_dir, "graph_neardup_edges", build)
+    return session_frame(spark, sf_dir, "graph_neardup_edges", build)
 
 
 def _pagerank_oracle() -> str:
@@ -198,10 +197,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         from .dedup import dedup_minhash_lsh
 
-        pairs = (
-            dedup_minhash_lsh(spark, sf_dir)
-            .select("doc_a", "doc_b")
-            .localCheckpoint(eager=True)
+        pairs = session_frame(
+            spark,
+            sf_dir,
+            "triangle_pairs",
+            lambda: dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b"),
         )
         sym = pairs.select(F.col("doc_a").alias("id"), F.col("doc_b").alias("nbr")).unionAll(
             pairs.select(F.col("doc_b").alias("id"), F.col("doc_a").alias("nbr"))
@@ -213,15 +213,20 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         a_first = (F.col("da") < F.col("db")) | (
             (F.col("da") == F.col("db")) & (F.col("doc_a") < F.col("doc_b"))
         )
-        oriented = withdeg.select(
-            F.when(a_first, F.col("doc_a")).otherwise(F.col("doc_b")).alias("src"),
-            F.when(a_first, F.col("doc_b")).otherwise(F.col("doc_a")).alias("dst"),
-            F.when(
-                a_first, F.struct(F.col("db").alias("d"), F.col("doc_b").alias("id"))
-            )
-            .otherwise(F.struct(F.col("da").alias("d"), F.col("doc_a").alias("id")))
-            .alias("dk"),
-        ).localCheckpoint(eager=True)
+        oriented = session_frame(
+            spark,
+            sf_dir,
+            "triangle_oriented",
+            lambda: withdeg.select(
+                F.when(a_first, F.col("doc_a")).otherwise(F.col("doc_b")).alias("src"),
+                F.when(a_first, F.col("doc_b")).otherwise(F.col("doc_a")).alias("dst"),
+                F.when(
+                    a_first, F.struct(F.col("db").alias("d"), F.col("doc_b").alias("id"))
+                )
+                .otherwise(F.struct(F.col("da").alias("d"), F.col("doc_a").alias("id")))
+                .alias("dk"),
+            ),
+        )
         e1 = oriented.select("src", F.col("dst").alias("v"), F.col("dk").alias("vk"))
         e2 = oriented.select("src", F.col("dst").alias("w"), F.col("dk").alias("wk"))
         wedges = e1.join(e2, "src").filter(F.col("vk") < F.col("wk"))
@@ -317,10 +322,9 @@ def _co_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             pairs.select("pr.p1", "pr.p2")
             .groupBy("p1", "p2")
             .agg(F.count(F.lit(1)).alias("n_co"))
-            .localCheckpoint(eager=True)
         )
 
-    return session_memo(spark, sf_dir, "graph_co_table", build)
+    return session_frame(spark, sf_dir, "graph_co_table", build)
 
 
 def _knn_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -349,10 +353,9 @@ def _knn_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "s -> s.p2) AS t"
                 )
             )
-            .localCheckpoint(eager=True)
         )
 
-    return session_memo(spark, sf_dir, "graph_knn_lists", build)
+    return session_frame(spark, sf_dir, "graph_knn_lists", build)
 
 
 def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -384,10 +387,9 @@ def _colist_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             pairs.select("pr.b", "pr.c")
             .groupBy("b", "c")
             .agg(F.count(F.lit(1)).alias("n_lists"))
-            .localCheckpoint(eager=True)
         )
 
-    return session_memo(spark, sf_dir, "graph_colist_table", build)
+    return session_frame(spark, sf_dir, "graph_colist_table", build)
 
 
 @query(
@@ -1106,30 +1108,31 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the label map joins onto the checkpointed symmetric
     edge list twice (src- then dst-keyed shuffles, both |E| rows of two
     BIGINTs); everything after is community-sized aggregates. The LPA
-    fixpoint itself is the memoized per-round loop the census query
-    runs — shared via session_memo, so scoring adds two joins and three
-    aggregates to an already-materialized partition."""
-
-    def build_labels() -> DataFrame:
-        edges = _neardup_edges(spark, sf_dir)
-        labels = edges.select(F.col("src").alias("doc")).distinct().withColumn(
-            "lbl", F.col("doc")
-        )
-        for _ in range(LPA_ITERS):
-            labels = (
-                edges.join(labels, edges.src == labels.doc)
-                .groupBy(F.col("dst"), F.col("lbl"))
-                .agg(F.count(F.lit(1)).alias("c"))
-                .groupBy("dst")
-                .agg(
-                    F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("nl"))).alias("m")
-                )
-                .select(F.col("dst").alias("doc"), (-F.col("m.nl")).alias("lbl"))
-            )
-        return labels.localCheckpoint(eager=True), edges
+    labels (the census query's rounds) are a session frame, so scoring
+    adds two joins and three aggregates to an already-materialized
+    partition."""
 
     def build() -> DataFrame:
-        labels, edges = build_labels()
+        edges = _neardup_edges(spark, sf_dir)
+
+        def lpa() -> DataFrame:
+            labels = edges.select(F.col("src").alias("doc")).distinct().withColumn(
+                "lbl", F.col("doc")
+            )
+            for _ in range(LPA_ITERS):
+                labels = (
+                    edges.join(labels, edges.src == labels.doc)
+                    .groupBy(F.col("dst"), F.col("lbl"))
+                    .agg(F.count(F.lit(1)).alias("c"))
+                    .groupBy("dst")
+                    .agg(
+                        F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("nl"))).alias("m")
+                    )
+                    .select(F.col("dst").alias("doc"), (-F.col("m.nl")).alias("lbl"))
+                )
+            return labels
+
+        labels = session_frame(spark, sf_dir, "modularity_lpa_labels", lpa)
         ls = labels.select(F.col("doc").alias("src"), F.col("lbl").alias("cs"))
         ld = labels.select(F.col("doc").alias("dst"), F.col("lbl").alias("cd"))
         el = edges.join(ls, "src").join(ld, "dst").select("cs", "cd")
@@ -1225,12 +1228,17 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         co = _co_table(spark, sf_dir)
         # symmetric directed pairs, both orientations present already
-        edges = (
-            co.filter(F.col("n_co") >= 2)
-            .select(F.col("p1").alias("u"), F.col("p2").alias("v"))
-            .localCheckpoint(eager=True)
+        edges = session_frame(
+            spark,
+            sf_dir,
+            "cc_star_edges",
+            lambda: co.filter(F.col("n_co") >= 2).select(
+                F.col("p1").alias("u"), F.col("p2").alias("v")
+            ),
         )
-        nodes = edges.select(F.col("u")).distinct().localCheckpoint(eager=True)
+        nodes = session_frame(
+            spark, sf_dir, "cc_star_nodes", lambda: edges.select(F.col("u")).distinct()
+        )
 
         # Per-round plumbing is STRING-expression form (selectExpr /
         # F.expr): each selectExpr is ONE py4j round trip that parses on

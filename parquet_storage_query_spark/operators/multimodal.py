@@ -3212,14 +3212,9 @@ def dedup_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     key is the shuffle key and hot keys split under AQE; measured here:
     4,161 qualifying pairs over 5,000 images at sf0.1, no candidate
     explosion (pixel-identical twins would surface as hamming 0)."""
-    from ..cache import session_memo
+    from ..cache import session_frame
 
-    fps = session_memo(
-        spark,
-        sf_dir,
-        "phash_fps",
-        lambda: mm_image_spectral_hash(spark, sf_dir).localCheckpoint(eager=True),
-    )
+    fps = session_frame(spark, sf_dir, "phash_fps", lambda: mm_image_spectral_hash(spark, sf_dir))
     bnd = fps.select(
         "doc_id",
         "phash_hi",

@@ -818,7 +818,7 @@ def profile_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same pass. All sums are integer cents lifted to DECIMAL(38,0)/
     HUGEINT for the e6 readouts (Σ rank·cents passes 10¹⁸ well before
     10⁹ customers — the documented headroom rule)."""
-    from ..cache import session_memo
+    from ..cache import session_frame
 
     def _rev() -> DataFrame:
         return (
@@ -829,10 +829,9 @@ def profile_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "cents"
                 )
             )
-            .localCheckpoint(eager=True)
         )
 
-    rev = session_memo(spark, sf_dir, "gini_revenue_view", _rev)
+    rev = session_frame(spark, sf_dir, "gini_revenue_view", _rev)
     max_cents = int(rev.agg(F.max("cents")).collect()[0][0])
     span = max(1, -(-(max_cents + 1) // _GINI_BUCKETS))
     bucketed = rev.withColumn("bucket", (F.col("cents") / span).cast("long"))
@@ -926,7 +925,7 @@ def profile_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sup is attained, min-tiebroken) makes the statistic auditable.
     The critical-value comparison c(α)·√((n₁+n₂)/(n₁n₂)) stays with the
     caller — a sqrt has no place in a checked output."""
-    from ..cache import session_memo
+    from ..cache import session_frame
 
     def _census() -> DataFrame:
         return (
@@ -945,10 +944,10 @@ def profile_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "c2"
                 ),
             )
-            .localCheckpoint(eager=True)  # domain-bounded: ≤ distinct cents rows
         )
 
-    census = session_memo(spark, sf_dir, "ks_census_purchase_click", _census)
+    # domain-bounded: ≤ distinct cents rows
+    census = session_frame(spark, sf_dir, "ks_census_purchase_click", _census)
     max_cents = int(census.agg(F.max("cents")).collect()[0][0])
     span = max(1, -(-(max_cents + 1) // _KS_BUCKETS))
     bucketed = census.withColumn("bucket", (F.col("cents") / span).cast("long"))
@@ -1046,7 +1045,7 @@ def profile_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     squared numerator passes 10²³ at 30× — integer headroom, no float
     anywhere). Shape: ONE corpus scan into the O(types×7) contingency
     census; margins and total fold from the census, not the corpus."""
-    from ..cache import session_memo
+    from ..cache import session_frame
 
     def _census() -> DataFrame:
         return (
@@ -1061,10 +1060,10 @@ def profile_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("dow"),
             )
             .agg(F.count(F.lit(1)).alias("obs"))
-            .localCheckpoint(eager=True)  # O(types×7) rows: one corpus scan
         )
 
-    o = session_memo(spark, sf_dir, "chi2_contingency_census", _census)
+    # O(types×7) rows: one corpus scan
+    o = session_frame(spark, sf_dir, "chi2_contingency_census", _census)
     r = o.groupBy("event_type").agg(F.sum("obs").alias("rt"))
     c = o.groupBy("dow").agg(F.sum("obs").alias("ct"))
     n = o.agg(F.sum("obs").alias("n"))

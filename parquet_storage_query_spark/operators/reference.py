@@ -149,6 +149,5 @@ def ref_total_count_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scan."""
     from ..catalog import metadata_scan
 
-    return metadata_scan(spark, sf_dir, "events").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
+    # SQL text: one py4j call instead of four, the same Aggregate plan
+    return metadata_scan(spark, sf_dir, "events").selectExpr("count(1) AS cnt")

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..cache import prepared, session_memo
+from ..cache import prepared, session_frame, session_memo
 from ..catalog import load, load_parallel
 from ..functions.vectors import as_double, cosine, dot, l2_norm
 from .dedup import COS_PLANES_PER_BAND, cos_lsh_index
@@ -678,20 +678,21 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "ivf_centroids", lambda: _train_centroids(spark, sf_dir)
     )
     e = e.withColumn("nv", l2_norm(F.col("v")))
-    # materialize the assignment ONCE (eager checkpoint): it feeds three
-    # plan branches (both self-join sides + the verdict table), which
-    # would otherwise each re-scan the corpus and re-fold the k cosines.
+    # materialize the assignment ONCE: it feeds three plan branches (both
+    # self-join sides + the verdict table), which would otherwise each
+    # re-scan the corpus and re-fold the k cosines.
     # The precomputed norm rides along so the within-cell verify is ONE
     # dot fold per pair instead of three (the cos_lsh_index trick —
     # identical float ops in the same order, so the oracle hash is
     # unchanged; measured ~3× off the pair-verify cost, the dominant
     # term of the build)
-    assigned = (
-        e.withColumn(
+    assigned = session_frame(
+        spark,
+        sf_dir,
+        "semdedup_assigned",
+        lambda: e.withColumn(
             "cell", F.expr(f"array_min({_negcs_sql(labels, cents, cent_norms)}).lbl")
-        )
-        .select("vec_id", "v", "nv", "cell")
-        .localCheckpoint(eager=True)
+        ).select("vec_id", "v", "nv", "cell"),
     )
 
     # cap comparison membership per cell (see SEM_CELL_BUDGET): rank by a
@@ -702,11 +703,13 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build so the SERVED plan joins two RDD scans: leaving the rank
     # window inline added ~4s of one-time per-stage codegen to the first
     # serve (window + SMJ + sorts), measured vs ~0.1s of window execution
-    capped = (
-        assigned.withColumn("_slot", F.row_number().over(wc))
+    capped = session_frame(
+        spark,
+        sf_dir,
+        "semdedup_capped",
+        lambda: assigned.withColumn("_slot", F.row_number().over(wc))
         .filter(F.col("_slot") <= SEM_CELL_BUDGET)
-        .drop("_slot")
-        .localCheckpoint(eager=True)
+        .drop("_slot"),
     )
     # drop count from a cell-size aggregate over the CHECKPOINTED rows
     # (≤k result rows) — counting the capped frame itself would execute
@@ -1443,10 +1446,9 @@ def _pq_corpus_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {f"c{s}": F.expr(_pq_assign_expr(codebooks[s], s) + ".c") for s in range(PQ_S)}
             )
             .select("vec_id", "cell", *[f"c{s}" for s in range(PQ_S)])
-            .localCheckpoint(eager=True)
         )
 
-    return session_memo(spark, sf_dir, "pq_corpus_index", _build)
+    return session_frame(spark, sf_dir, "pq_corpus_index", _build)
 
 
 def _pq_adc_scored(spark: SparkSession, sf_dir: str, lo: int, hi: int) -> DataFrame:
@@ -2048,10 +2050,9 @@ def sim_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "x -> CAST(round(x * 1000000) AS BIGINT))"
                 ).alias("vq"),
             )
-            .localCheckpoint(eager=True)
         )
 
-    vq = session_memo(spark, sf_dir, "power_iter_vq", base)
+    vq = session_frame(spark, sf_dir, "power_iter_vq", base)
 
     def w_of(u: list[int]) -> DataFrame:
         ulit = "array(" + ", ".join(f"{x}L" for x in u) + ")"
@@ -2324,8 +2325,12 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     w = W.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), "vec_id")
-    cand = (
-        e.join(F.broadcast(q), F.col("query_id") != F.col("vec_id"))
+    # O(|Q|·pool) rows
+    cand = session_frame(
+        spark,
+        sf_dir,
+        "mmr_pool",
+        lambda: e.join(F.broadcast(q), F.col("query_id") != F.col("vec_id"))
         .withColumn("cos_raw", cosine(F.col("qv"), F.col("v")))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= MMR_POOL)
@@ -2334,8 +2339,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "v",
             F.expr("CAST(round(1000000 * cos_raw) AS BIGINT)").alias("rel_e6"),
-        )
-        .localCheckpoint(eager=True)  # O(|Q|·pool) rows
+        ),
     )
     a = cand.select("query_id", F.col("vec_id").alias("pa"), F.col("v").alias("va"))
     b = cand.select("query_id", F.col("vec_id").alias("pb"), F.col("v").alias("vb"))
@@ -2597,8 +2601,8 @@ SQ8_LEVELS = 255  # codes 0..255
 def _sq8_index(spark: SparkSession, sf_dir: str):
     """The persisted SQ8 index: one stats scan (per-dimension min/max, a
     single 128-expression aggregate row) and one encode scan
-    (transform-with-index against the broadcast stats arrays), eagerly
-    checkpointed once per session. At 100 TB the codes table is what you
+    (transform-with-index against the broadcast stats arrays), each
+    materialized once per session. At 100 TB the codes table is what you
     store: 64 bytes/vector (4x vs float32, 8x vs the doubles the exact
     scorer reads) and serving never touches the originals. Returns
     (codes_df, stats_df) — stats is ONE row, always broadcast."""
@@ -2612,9 +2616,9 @@ def _sq8_index(spark: SparkSession, sf_dir: str):
         # plan construction); identical aggregate tree, same results
         mn = "array(" + ",".join(f"min(element_at(v, {i + 1}))" for i in range(DIM)) + ") AS mn"
         mx = "array(" + ",".join(f"max(element_at(v, {i + 1}))" for i in range(DIM)) + ") AS mx"
-        return e.agg(F.expr(mn), F.expr(mx)).localCheckpoint(eager=True)
+        return e.agg(F.expr(mn), F.expr(mx))
 
-    stats = session_memo(spark, sf_dir, "sq8_stats", build_stats)
+    stats = session_frame(spark, sf_dir, "sq8_stats", build_stats)
 
     def build_codes() -> DataFrame:
         e = load_parallel(spark, sf_dir, "embeddings").select(
@@ -2646,10 +2650,9 @@ def _sq8_index(spark: SparkSession, sf_dir: str):
         return (
             e.crossJoin(F.broadcast(stats))
             .select("vec_id", code.alias("c"))
-            .localCheckpoint(eager=True)
         )
 
-    return session_memo(spark, sf_dir, "sq8_codes", build_codes), stats
+    return session_frame(spark, sf_dir, "sq8_codes", build_codes), stats
 
 
 def _sq8_oracle() -> str:

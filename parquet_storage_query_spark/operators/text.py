@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import prepared, session_memo
+from ..cache import prepared, session_frame, session_memo
 from ..catalog import load, load_parallel
 from ..registry import query
 
@@ -249,13 +249,10 @@ def text_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             vocab.crossJoin(F.broadcast(total))
             .select("tok", F.log(F.col("cnt").cast("double") / F.col("total")).alias("logp"))
-            .localCheckpoint(eager=True)
         )
 
-    # The trained model (vocabulary-sized) is memoized per (session,
-    # sf_dir); scoring re-executes per call. The eager localCheckpoint
-    # both materializes the training pass once and truncates its lineage.
-    lp = session_memo(spark, sf_dir, "unigram_lm", _train_lm)
+    # The trained model is vocabulary-sized; scoring re-executes per call.
+    lp = session_frame(spark, sf_dir, "unigram_lm", _train_lm)
     avg_lp = F.sum(F.col("n_td") * F.col("logp")) / F.sum("n_td")
     return (
         tf.join(lp, "tok")
@@ -703,10 +700,10 @@ def text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE corpus scan. Every other input derives from the TF
     table itself — doc lengths are Σ n_td per doc, document frequencies
     are COUNT per term, the corpus size is the doclen row count — and the
-    TF table is materialized once (eager localCheckpoint, the
-    minhash_docs staging-table pattern) because its three consumers would
-    otherwise each re-run the explode+count subtree (Catalyst's exchange
-    reuse only deduplicated one of them, measured). The IDF table joins
+    TF table is materialized once (the minhash_docs staging-table
+    pattern) because its three consumers would otherwise each re-run the
+    explode+count subtree (Catalyst's exchange reuse only deduplicated
+    one of them, measured). The IDF table joins
     back HINT-FREE: vocabulary grows with the corpus (web-crawl token
     junk is unbounded), so a static broadcast would OOM at scale — AQE
     broadcasts it while it fits (it does at every bench SF) and shuffles
@@ -717,10 +714,11 @@ def text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(words_col()).alias("term"))
-    tf = (
-        toks.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("n_td"))
-        .localCheckpoint(eager=True)
+    tf = session_frame(
+        spark,
+        sf_dir,
+        "tfidf_tf",
+        lambda: toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("n_td")),
     )
     doclen = tf.groupBy("doc_id").agg(F.sum("n_td").alias("n_tokens"))
     idf = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -1052,7 +1050,7 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE the vocab joins so only frequent pairs join; the vocab-sized
     unigram side is hint-free (AQE broadcasts while small); the top-25
     plans TakeOrderedAndProject."""
-    from ..cache import session_memo
+    from ..cache import session_frame
 
     docs = load_parallel(spark, sf_dir, "documents")  # CPU-bound tokenizing
 
@@ -1071,10 +1069,9 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("c"),
                 F.count(F.when(F.col("pos") == 0, 1)).alias("c_first"),
             )
-            .localCheckpoint(eager=True)
         )
 
-    uni = session_memo(spark, sf_dir, "collocations_unigrams", _uni)
+    uni = session_frame(spark, sf_dir, "collocations_unigrams", _uni)
     bt = uni.agg((F.sum("c") - F.sum("c_first")).alias("bt"))
     big = docs.select(words_col().alias("w")).select(
         F.explode(
@@ -1121,7 +1118,7 @@ def _postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     build and every search it serves share one corpus scan. Explode is
     map-side; the groupBy partial-aggregates so the shuffle carries
     |distinct (token, doc)| rows, not |tokens|."""
-    from ..cache import session_memo
+    from ..cache import session_frame
 
     def build() -> DataFrame:
         return (
@@ -1129,10 +1126,9 @@ def _postings(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", F.explode(words_col()).alias("token"))
             .groupBy("token", "doc_id")
             .agg(F.count(F.lit(1)).alias("tf"))
-            .localCheckpoint(eager=True)
         )
 
-    return session_memo(spark, sf_dir, "text_postings", build)
+    return session_frame(spark, sf_dir, "text_postings", build)
 
 
 @query(

@@ -761,9 +761,8 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15: the supplier(s) with the maximum quarterly revenue —
     the view-plus-scalar-subquery pattern. The |supplier|-row revenue
-    view is one partial-agg'd suppkey shuffle, materialized ONCE
-    (localCheckpoint via session_memo — the suite's prepared-statement
-    pattern) because it feeds two consumers, the ranking and its own
+    view is one partial-agg'd suppkey shuffle, materialized ONCE per
+    session because it feeds two consumers, the ranking and its own
     max, and Catalyst does not reuse the exchange across them (verified
     on the executed plan: without the checkpoint the quarter slice of
     the fact is scanned twice). The scalar max is a one-row aggregate
@@ -771,7 +770,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a driver collect. Ties survive exactly as SQL's `= max` keeps
     them; revenue is rounded before the comparison so the tie set
     replays across engines."""
-    from ..cache import session_memo
+    from ..cache import session_frame
 
     def _view() -> DataFrame:
         li = load(spark, sf_dir, "lineitem").filter(
@@ -785,10 +784,9 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
                 ).alias("total_revenue")
             )
-            .localCheckpoint(eager=True)
         )
 
-    revenue = session_memo(spark, sf_dir, "q15_revenue_view", _view)
+    revenue = session_frame(spark, sf_dir, "q15_revenue_view", _view)
     best_rev = revenue.agg(F.max("total_revenue").alias("_max"))
     best = revenue.crossJoin(F.broadcast(best_rev)).filter(
         F.col("total_revenue") == F.col("_max")
@@ -1050,7 +1048,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange across them; the scalar total then broadcasts back as a cross
     join, never a driver collect. Values rank in exact integer cents, so
     the threshold comparison and the ordering are executor-order exact."""
-    from ..cache import session_memo
+    from ..cache import session_frame
 
     def _val() -> DataFrame:
         nat = load(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
@@ -1068,10 +1066,9 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "value_cents"
                 )
             )
-            .localCheckpoint(eager=True)
         )
 
-    val = session_memo(spark, sf_dir, "q11_value_view", _val)
+    val = session_frame(spark, sf_dir, "q11_value_view", _val)
     thr = val.agg(
         F.sum("value_cents").alias("total_cents"), F.count("*").alias("n_parts")
     )

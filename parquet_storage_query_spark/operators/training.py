@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..cache import prepared
+from ..cache import prepared, session_frame
 from ..catalog import load, load_parallel
 from ..registry import query
 from .text import LEXICONS, _hits, _sql_hits, words_col
@@ -154,10 +154,13 @@ def train_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     slim = load(spark, sf_dir, "documents").select("doc_id", "source", h.alias("h"))
     n_parts = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
-    ranged = (
-        slim.repartitionByRange(n_parts, "h", "doc_id")
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    ranged = session_frame(
+        spark,
+        sf_dir,
+        "train_interleave_ranged",
+        lambda: slim.repartitionByRange(n_parts, "h", "doc_id").withColumn(
+            "_pid", F.spark_partition_id()
+        ),
     )
     counts = {
         r["_pid"]: r["n"]

@@ -261,7 +261,7 @@ def window_global_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     The key-bound scalar comes from a 1-row aggregate here; a lakehouse
     table serves it from footer stats (profile_minmax_meta) for free.
     Integer cents keep the running sum exact under any bucketing."""
-    from ..cache import session_memo
+    from ..cache import session_frame
 
     def _base() -> DataFrame:
         return (
@@ -270,10 +270,10 @@ def window_global_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "c_custkey",
                 F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
             )
-            .localCheckpoint(eager=True)  # one corpus scan feeds all 3 jobs
         )
 
-    base = session_memo(spark, sf_dir, "prefix_base_customer", _base)
+    # one corpus scan feeds all 3 jobs
+    base = session_frame(spark, sf_dir, "prefix_base_customer", _base)
     max_key = base.agg(F.max("c_custkey")).collect()[0][0]
     span = max(1, -(-int(max_key) // _PREFIX_BUCKETS))  # ceil
     bucketed = base.withColumn(

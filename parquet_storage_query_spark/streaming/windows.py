@@ -272,7 +272,7 @@ def _state_partitions(
     Sizing is data-derived, not core-count-derived, so it holds at any
     scale and under the driver's low-core leg:
     - `keys`: upper bound of the AGGREGATION KEY DOMAIN when the operator
-      bounds it structurally (nation x status <= 75, languages <= ~8).
+      bounds it structurally (nation x status <= 75, languages: 5).
       One reduce slot per ~8 keys; map-side partial aggregation already
       bounds each task's exchange output at O(keys) rows, so extra
       reducers are pure commit overhead at ANY corpus size.

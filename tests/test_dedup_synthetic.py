@@ -165,7 +165,7 @@ def test_cos_scale_guard_engages_inside_the_bulk(spark, monkeypatch):
     assert stats["admit_frac"] > 100 * COS_ADMIT_EPS
     assert 0.3 < stats["quantile"] < 0.6  # 0.45 sits in/near the bulk
 
-    bands = cos_lsh_index(spark, SF_SMOKE, e)
+    bands = cos_lsh_index(spark, SF_SMOKE)
     n_before = bands.count()
     guarded = cos_scale_guard(bands, e)
     assert LAST_COS_GUARD["engaged"] is True

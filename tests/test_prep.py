@@ -2056,3 +2056,20 @@ def test_avi_mjpeg_roundtrip_and_loud_failures():
     bad = avi.replace(b"vidsMJPG", b"vidsH264", 1)
     with _pytest.raises(NotImplementedError, match="MJPG"):
         decode_avi_mjpeg(bad)
+
+
+def test_footer_count_on_converted_micros_folder(spark, tmp_path):
+    """ref_total_count_meta reads with the schema `load` would use: on an
+    events folder written by prep.convert (micros `ts`, not the corpus's
+    TIMESTAMP(NANOS)) that is SCHEMAS, and the footer count is the
+    folder's row count."""
+    from parquet_storage_query_spark.operators.reference import ref_total_count_meta
+
+    src_csv = str(tmp_path / "events_csv")
+    sf = tmp_path / "sf"
+    events = load(spark, SF_SMOKE, "events")
+    events.write.csv(src_csv)
+    prep.convert(spark, src_csv, str(sf / "events.parquet"), SCHEMAS["events"])
+    n = spark.read.parquet(str(sf / "events.parquet")).count()
+    assert n == events.count() > 0
+    assert ref_total_count_meta(spark, str(sf)).collect()[0]["cnt"] == n

@@ -12,6 +12,8 @@
 
 from __future__ import annotations
 
+import contextlib
+import json
 import socket
 
 from parquet_storage_query_spark.streaming.windows import (
@@ -58,23 +60,14 @@ def test_state_partitions_sizing(spark, monkeypatch):
     assert _state_partitions(spark, backlog_bytes=big) == 3
 
 
-def test_run_to_memory_partitions_reach_query_and_conf_restored(spark, tmp_path):
-    import json
-
-    from pyspark.sql import functions as F
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    df = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", "500")
-        .option("numPartitions", "1")
-        .load()
-        .groupBy((F.col("value") % 5).alias("k"))
-        .count()
-    )
-    captured = {}
+@contextlib.contextmanager
+def _captured_state_partitions():
+    """Yield a dict that receives `parts`: the numShufflePartitions of the
+    stateful operator of each streaming query stopped inside the block,
+    read from its progress just before stop()."""
     import pyspark.sql.streaming.query as _sq
 
+    captured = {}
     orig_stop = _sq.StreamingQuery.stop
 
     def capturing_stop(self):
@@ -89,6 +82,24 @@ def test_run_to_memory_partitions_reach_query_and_conf_restored(spark, tmp_path)
 
     _sq.StreamingQuery.stop = capturing_stop
     try:
+        yield captured
+    finally:
+        _sq.StreamingQuery.stop = orig_stop
+
+
+def test_run_to_memory_partitions_reach_query_and_conf_restored(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    df = (
+        spark.readStream.format("rate")
+        .option("rowsPerSecond", "500")
+        .option("numPartitions", "1")
+        .load()
+        .groupBy((F.col("value") % 5).alias("k"))
+        .count()
+    )
+    with _captured_state_partitions() as captured:
         import time
 
         # rate source ticks in wall time: give it a moment to emit rows
@@ -96,10 +107,29 @@ def test_run_to_memory_partitions_reach_query_and_conf_restored(spark, tmp_path)
         # state and reports numShufflePartitions, so no flake either way)
         time.sleep(2)
         _run_to_memory(df, "t_state_parts_out", "update", partitions=2)
-    finally:
-        _sq.StreamingQuery.stop = orig_stop
     assert captured.get("parts") == 2
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def test_jsonl_stream_state_partitions_sized_for_language_domain(spark, monkeypatch):
+    """source_jsonl_stream sizes its per-lang state from the language
+    domain, not from the session: at the test session's 8 shuffle
+    partitions the started query holds the one state partition that 5
+    languages need (8 measured ~20x the commit time for the same rows)."""
+    from parquet_storage_query_spark.operators.advanced import (
+        LANG_DOMAIN_BOUND,
+        source_jsonl_stream,
+    )
+
+    from .conftest import SF_SMOKE
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == 8
+    assert _state_partitions(spark, keys=LANG_DOMAIN_BOUND) == 1
+    with _captured_state_partitions() as captured:
+        rows = source_jsonl_stream(spark, SF_SMOKE).collect()
+    assert len(rows) <= LANG_DOMAIN_BOUND
+    assert captured.get("parts") == 1, captured
 
 
 def test_local_dir_bytes(tmp_path):
