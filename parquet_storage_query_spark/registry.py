@@ -6,13 +6,15 @@ the driver; `tests/` and `bench.py` iterate it. One source of truth keeps
 the three consumers (driver correctness gate, pytest, bench) in lockstep.
 
 Builders have signature (spark, sf_dir) -> DataFrame. Oracle SQL runs on
-DuckDB with the corpus tables pre-registered as views. Queries without an
+DuckDB with the corpus tables pre-registered as views
+(`fingerprint.oracle_connection`). Queries without an
 oracle (approximate / non-SQL-expressible, e.g. LSH, streaming) register
 oracle=None and get a rows-only check.
 """
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -232,6 +234,16 @@ def all_queries() -> dict[str, QueryDef]:
     out = {n: _REGISTRY[n] for n in _PRIORITY if n in _REGISTRY}
     out.update((n, d) for n, d in _REGISTRY.items() if n not in out)
     return out
+
+
+def require_known(names) -> None:
+    """Exit 2 naming any unregistered query among `names`: in a tool that
+    takes query names, a typo must not yield a green "0 failed" run or a
+    bare KeyError."""
+    unknown = sorted(set(names) - set(all_queries()))
+    if unknown:
+        print(f"unknown queries: {unknown}", file=sys.stderr)
+        raise SystemExit(2)
 
 
 def builders() -> dict[str, Builder]:

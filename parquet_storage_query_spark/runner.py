@@ -45,12 +45,14 @@ from __future__ import annotations
 
 import json
 import time
+from contextlib import ExitStack
 from typing import Any
 
 from pyspark.sql import SparkSession
 
-from .catalog import TABLES, SCHEMAS, table_path
-from .registry import all_queries, resolve_oracle
+from .catalog import SCHEMAS
+from .fingerprint import oracle_connection, oracle_result, result_fingerprint
+from .registry import all_queries
 from .session import get_spark
 from .sources import prep
 
@@ -87,23 +89,14 @@ def _run_prep(spark: SparkSession, job: dict[str, Any]) -> dict[str, Any]:
     return {"kind": kind, "dest": job["dest"], "seconds": round(time.perf_counter() - t0, 3), **detail}
 
 
-def _differential(name: str, sf_dir: str, spark_rows: list[tuple], spark_cols: list[str]) -> dict[str, Any]:
+def _differential(con, name: str, sf_dir: str, spark_cols: list[str], spark_rows: list[tuple]) -> dict[str, Any]:
     """D6: run the registered DuckDB oracle on the same parquet folder and
-    compare count + order-insensitive value hash."""
-    import duckdb
-
+    compare the fingerprints (row count + order-insensitive value hash)."""
     qd = all_queries()[name]
     if qd.oracle is None:
         return {"differential": "no-oracle"}
-    from .fingerprint import result_fingerprint as fp
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')")
-    cur = con.execute(resolve_oracle(qd.oracle, sf_dir))
-    ocols = [d[0] for d in cur.description]
-    orows = cur.fetchall()
-    match = len(orows) == len(spark_rows) and fp(spark_cols, spark_rows) == fp(ocols, orows)
+    ocols, orows = oracle_result(con, sf_dir, qd.oracle)
+    match = result_fingerprint(spark_cols, spark_rows) == result_fingerprint(ocols, orows)
     return {"differential": "match" if match else "MISMATCH", "oracle_rows": len(orows)}
 
 
@@ -152,21 +145,26 @@ def run(config: str | dict[str, Any], spark: SparkSession | None = None) -> dict
         print(f"prep {res['kind']} -> {res['dest']}: {res['seconds']}s")
         report["prep"].append(res)
 
-    for job in cfg.get("queries", []) or []:
-        name, sf_dir = job["name"], job["sf_dir"]
-        if name not in queries:
-            raise KeyError(f"unknown query: {name}")
-        t0 = time.perf_counter()
-        df = queries[name].builder(spark, sf_dir)
-        rows = df.collect()
-        elapsed = round(time.perf_counter() - t0, 3)
-        entry: dict[str, Any] = {"name": name, "rows": len(rows), "seconds": elapsed}
-        # S9 preview sink: first 5 rows (QO:441-444's Take(5))
-        preview = [tuple(r) for r in rows[:5]]
-        print(f"query {name}: {len(rows)} rows in {elapsed}s; preview: {preview}")
-        if job.get("differential"):
-            entry.update(_differential(name, sf_dir, [tuple(r) for r in rows], df.columns))
-        report["queries"].append(entry)
+    oracle_cons: dict[str, Any] = {}  # one per sf_dir, closed when the run ends
+    with ExitStack() as stack:
+        for job in cfg.get("queries", []) or []:
+            name, sf_dir = job["name"], job["sf_dir"]
+            if name not in queries:
+                raise KeyError(f"unknown query: {name}")
+            t0 = time.perf_counter()
+            df = queries[name].builder(spark, sf_dir)
+            rows = df.collect()
+            elapsed = round(time.perf_counter() - t0, 3)
+            entry: dict[str, Any] = {"name": name, "rows": len(rows), "seconds": elapsed}
+            # S9 preview sink: first 5 rows (QO:441-444's Take(5))
+            preview = [tuple(r) for r in rows[:5]]
+            print(f"query {name}: {len(rows)} rows in {elapsed}s; preview: {preview}")
+            if job.get("differential"):
+                if sf_dir not in oracle_cons:
+                    oracle_cons[sf_dir] = stack.enter_context(oracle_connection(sf_dir))
+                con, rows = oracle_cons[sf_dir], [tuple(r) for r in rows]
+                entry.update(_differential(con, name, sf_dir, df.columns, rows))
+            report["queries"].append(entry)
     return report
 
 

@@ -22,3 +22,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def folder_corpus(tmp_path_factory) -> str:
+    """The smoke corpus with `events.parquet` stored as a folder of 4
+    files, the table shape the engine serves (a folder of blobs)."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    dest = tmp_path_factory.mktemp("folder_corpus")
+    for src in Path(SF_SMOKE).glob("*.parquet"):
+        if src.name != "events.parquet":
+            shutil.copy(src, dest / src.name)
+    events = pq.read_table(Path(SF_SMOKE) / "events.parquet")
+    (dest / "events.parquet").mkdir()
+    step = -(-events.num_rows // 4)
+    for i in range(4):
+        pq.write_table(events.slice(i * step, step), dest / "events.parquet" / f"part-{i:05d}.parquet")
+    return str(dest)

@@ -166,8 +166,11 @@ def test_marker_commit_order_survives_migration_and_copies(tmp_path):
     d = dest / "_committed"
     d.mkdir(parents=True)
     (d / "bbb").touch()  # legacy marker, committed first
-    time.sleep(0.01)
     (d / "aaa").touch()  # legacy marker, committed second (later mtime)
+    # explicit mtimes: two touches 10 ms apart can share one coarse
+    # filesystem timestamp on a loaded host, and a tie sorts by name
+    past = time.time() - 1
+    os.utime(d / "bbb", (past, past))
     (d / "000003-ccc").touch()  # post-migration appends
     (d / "000004-ddd").touch()
     assert committed_versions(str(dest)) == ["bbb", "aaa", "ccc", "ddd"]

@@ -8,12 +8,15 @@ automated hash comparison per SURVEY.md §5.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
-from parquet_storage_query_spark.catalog import TABLES, table_path
-from parquet_storage_query_spark.registry import all_queries, resolve_oracle
-from tools.check import result_fingerprint
+from parquet_storage_query_spark.fingerprint import (
+    oracle_connection,
+    oracle_result,
+    result_fingerprint,
+    spark_result,
+)
+from parquet_storage_query_spark.registry import all_queries
 
 from .conftest import SF_SMOKE
 
@@ -22,19 +25,17 @@ _QUERIES = all_queries()
 
 @pytest.fixture(scope="module")
 def oracle_con():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(SF_SMOKE, t)}')"
-        )
-    return con
+    with oracle_connection(SF_SMOKE) as con:
+        yield con
 
 
 # Queries whose sf0.001 differential row measures >= ~2.5 s (iterative
 # fixpoints, BPE training, rsd-0.01 HLL, stream harnesses, k-means) —
 # marked slow so the fast lane (`pytest -m "not slow"`, <5 min) stays a
 # gate people actually run. The FULL suite, the driver's sf0.01 gate,
-# and tools/check.py still cover every one of these.
+# and tools/check.py still cover every one of these. Every pandas-fetch
+# row (ids `<name>-pandas`, after all collect rows so they run warm) is
+# slow too: `tools/check.py --pandas` is the same gate at sf0.01.
 _SLOW_ROWS = {
     "graph_kcore", "graph_pagerank", "text_bpe_vocab_train",
     "text_bpe_tokenize_apply", "agg_approx_distinct",
@@ -48,25 +49,26 @@ _SLOW_ROWS = {
 
 
 @pytest.mark.parametrize(
-    "name",
+    "name,pandas",
     [
-        pytest.param(n, marks=pytest.mark.slow) if n in _SLOW_ROWS else n
+        pytest.param(n, False, id=n, marks=[pytest.mark.slow] if n in _SLOW_ROWS else [])
+        for n in sorted(_QUERIES)
+    ]
+    + [
+        pytest.param(n, True, id=f"{n}-pandas", marks=pytest.mark.slow)
         for n in sorted(_QUERIES)
     ],
 )
-def test_query_matches_oracle(name, spark, oracle_con):
+def test_query_matches_oracle(name, pandas, spark, oracle_con):
     qd = _QUERIES[name]
-    sdf = qd.builder(spark, SF_SMOKE)
-    srows = [tuple(r) for r in sdf.collect()]
+    scols, srows = spark_result(qd.builder(spark, SF_SMOKE), pandas)
     if qd.oracle is None:
         # rows-only contract: runs, stable schema, deterministic row count
-        again = [tuple(r) for r in qd.builder(spark, SF_SMOKE).collect()]
+        again = spark_result(qd.builder(spark, SF_SMOKE), pandas)[1]
         assert len(srows) == len(again)
         return
-    cur = oracle_con.execute(resolve_oracle(qd.oracle, SF_SMOKE))
-    ocols = [d[0] for d in cur.description]
-    orows = cur.fetchall()
-    assert result_fingerprint(sdf.columns, srows) == result_fingerprint(ocols, orows)
+    ocols, orows = oracle_result(oracle_con, SF_SMOKE, qd.oracle, pandas)
+    assert result_fingerprint(scols, srows) == result_fingerprint(ocols, orows)
 
 
 def test_approx_percentiles_within_tolerance(spark):

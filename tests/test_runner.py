@@ -42,6 +42,33 @@ def test_runner_executes_prep_then_queries(spark, tmp_path):
     assert report["queries"][1]["differential"] == "match"
 
 
+def test_runner_differential_one_oracle_per_sf_dir_over_folder_events(spark, folder_corpus, monkeypatch):
+    """Differential jobs over a corpus whose `events` is a 4-file folder
+    match, and the run opens one oracle connection per sf_dir and closes
+    each when it ends."""
+    import duckdb
+
+    opened, real = [], runner.oracle_connection
+
+    def counting(sf_dir):
+        opened.append(real(sf_dir))
+        return opened[-1]
+
+    monkeypatch.setattr(runner, "oracle_connection", counting)
+    names = ["ref_total_count", "ref_per_file_counts", "ref_min_max"]
+    cfg = {
+        "queries": [{"name": n, "sf_dir": folder_corpus, "differential": True} for n in names]
+        + [{"name": "ref_total_count", "sf_dir": SF_SMOKE, "differential": True}],
+    }
+    report = runner.run(cfg, spark=spark)
+    assert [q["differential"] for q in report["queries"]] == ["match"] * 4
+    assert report["queries"][1]["rows"] == 4  # one count per file of the folder
+    assert len(opened) == 2
+    for con in opened:
+        with pytest.raises(duckdb.ConnectionException):
+            con.execute("SELECT 1")
+
+
 def test_runner_loads_json_config_file(spark, tmp_path):
     cfg_file = tmp_path / "cfg.json"
     cfg_file.write_text(

@@ -1,9 +1,11 @@
 """Local emulation of the driver's correctness gate.
 
 Runs every registered query on Spark at the given sf_dir AND its DuckDB
-oracle on the same parquet files, then compares row count, sorted column
-names, and an order-insensitive value hash. Stricter than tolerant — if
-this passes, the driver's CORRECTNESS check should too.
+oracle on the same parquet files (a table may be one file or a folder of
+them), then compares row count, sorted column names, and an
+order-insensitive value hash, all through the package's fingerprint.py.
+Stricter than tolerant — if this passes, the driver's CORRECTNESS check
+should too.
 
 Usage: python tools/check.py [--threads N] [--pandas] [sf_dir] [query ...]
 
@@ -31,25 +33,17 @@ import sys
 import time
 from pathlib import Path
 
-import duckdb
-
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from parquet_storage_query_spark.catalog import TABLES, table_path
-from parquet_storage_query_spark.fingerprint import (  # noqa: F401  (re-export)
-    norm_cell,
+from parquet_storage_query_spark.fingerprint import (
+    canon_lines,
+    oracle_connection,
+    oracle_result,
     result_fingerprint,
+    spark_result,
 )
-from parquet_storage_query_spark.registry import all_queries, resolve_oracle
+from parquet_storage_query_spark.registry import all_queries, require_known
 from parquet_storage_query_spark.session import get_spark
-
-
-def pandas_rows(pdf) -> list[tuple]:
-    """Render a pandas frame the way a repr-based comparator would see it:
-    numpy scalars keep their dtype identity (str(np.float64(42.0)) ==
-    '42.0'), so int64-vs-float64 engine divergence must fingerprint
-    differently here — that is the point of the mode."""
-    return [tuple(r) for r in pdf.itertuples(index=False, name=None)]
 
 
 def main() -> int:
@@ -64,73 +58,43 @@ def main() -> int:
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
     ap.add_argument("queries", nargs="*")
     ns = ap.parse_args()
-    threads = ns.threads
-    use_pandas = ns.use_pandas
-    sf_dir = ns.sf_dir
-    only = set(ns.queries)
-    unknown = only - set(all_queries())
-    if unknown:
-        # a typo'd name must not yield a green "0 ok, 0 failed" gate
-        print(f"unknown queries: {sorted(unknown)}", file=sys.stderr)
-        return 2
+    use_pandas, sf_dir, only = ns.use_pandas, ns.sf_dir, set(ns.queries)
+    require_known(only)
     spark = get_spark("check")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')")
-
+    con = oracle_connection(sf_dir)
     qs = all_queries()
     todo = [n for n in sorted(qs) if not only or n in only]
 
-    spark_results: dict[str, tuple[list[str], list[tuple]] | Exception] = {}
-    if threads:
+    def run_spark(name: str) -> tuple[list[str], list[tuple]] | Exception:
+        try:
+            return spark_result(qs[name].builder(spark, sf_dir), use_pandas)
+        except Exception as e:  # noqa: BLE001
+            return e
+
+    ahead: dict[str, tuple[list[str], list[tuple]] | Exception] = {}
+    if ns.threads:
         # concurrent-driver emulation: run every Spark side first, N-wide
         from concurrent.futures import ThreadPoolExecutor
 
-        def run_spark(name: str) -> None:
-            try:
-                sdf = qs[name].builder(spark, sf_dir)
-                rows = pandas_rows(sdf.toPandas()) if use_pandas else [tuple(r) for r in sdf.collect()]
-                spark_results[name] = (sdf.columns, rows)
-            except Exception as e:  # noqa: BLE001
-                spark_results[name] = e
-
-        with ThreadPoolExecutor(max_workers=threads) as pool:
-            list(pool.map(run_spark, todo))
+        with ThreadPoolExecutor(max_workers=ns.threads) as pool:
+            ahead = dict(zip(todo, pool.map(run_spark, todo)))
 
     failures, passed, rows_only = [], 0, 0
     for name in todo:
         qd = qs[name]
         t0 = time.perf_counter()
-        try:
-            if threads:
-                got = spark_results[name]
-                if isinstance(got, Exception):
-                    raise got
-                scols, srows = got
-            else:
-                sdf = qd.builder(spark, sf_dir)
-                scols = sdf.columns
-                if use_pandas:
-                    srows = pandas_rows(sdf.toPandas())
-                else:
-                    srows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:  # noqa: BLE001
-            failures.append((name, f"SPARK ERROR: {e}"))
-            print(f"FAIL  {name}: spark error: {str(e)[:300]}")
+        got = ahead[name] if ns.threads else run_spark(name)
+        if isinstance(got, Exception):
+            failures.append((name, f"SPARK ERROR: {got}"))
+            print(f"FAIL  {name}: spark error: {str(got)[:300]}")
             continue
+        scols, srows = got
         if qd.oracle is None:
             rows_only += 1
             print(f"rows  {name}: {len(srows)} rows ({time.perf_counter()-t0:.1f}s) [no oracle]")
             continue
         try:
-            if use_pandas:
-                opdf = con.sql(resolve_oracle(qd.oracle, sf_dir)).df()
-                ocols = list(opdf.columns)
-                orows = pandas_rows(opdf)
-            else:
-                cur = con.execute(resolve_oracle(qd.oracle, sf_dir))
-                ocols = [d[0] for d in cur.description]
-                orows = cur.fetchall()
+            ocols, orows = oracle_result(con, sf_dir, qd.oracle, use_pandas)
         except Exception as e:  # noqa: BLE001
             failures.append((name, f"DUCKDB ERROR: {e}"))
             print(f"FAIL  {name}: duckdb error: {str(e)[:300]}")
@@ -147,11 +111,10 @@ def main() -> int:
             if sfp[1] != ofp[1]:
                 print("      COLUMN MISMATCH")
             elif sfp[0] == ofp[0]:
-                smap = {l for l in ("|".join(norm_cell(r[i]) for i in sorted(range(len(scols)), key=lambda i: scols[i])) for r in srows)}
-                omap = {l for l in ("|".join(norm_cell(r[i]) for i in sorted(range(len(ocols)), key=lambda i: ocols[i])) for r in orows)}
-                for d in list(smap - omap)[:3]:
+                sl, ol = set(canon_lines(scols, srows)), set(canon_lines(ocols, orows))
+                for d in sorted(sl - ol)[:3]:
                     print(f"      spark-only : {d[:200]}")
-                for d in list(omap - smap)[:3]:
+                for d in sorted(ol - sl)[:3]:
                     print(f"      oracle-only: {d[:200]}")
     print(f"\n{passed} ok, {rows_only} rows-only, {len(failures)} failed")
     return 1 if failures else 0

@@ -21,17 +21,17 @@ import duckdb
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from parquet_storage_query_spark.catalog import TABLES, table_path
-from parquet_storage_query_spark.fingerprint import norm_cell, result_fingerprint
-from parquet_storage_query_spark.registry import all_queries, resolve_oracle
+from parquet_storage_query_spark.fingerprint import (
+    canon_lines,
+    oracle_connection,
+    oracle_result,
+    result_fingerprint,
+    spark_result,
+)
+from parquet_storage_query_spark.registry import all_queries, require_known
 from parquet_storage_query_spark.session import get_spark
 
 MAX_ROWS = 40  # full dump cap per engine; beyond it only differing lines print
-
-
-def canon_lines(cols: list[str], rows: list[tuple]) -> list[str]:
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted("|".join(norm_cell(r[i]) for i in order) for r in rows)
 
 
 def typed_row(cols: list[str], row: tuple) -> str:
@@ -47,27 +47,21 @@ def main() -> int:
     if not args:
         print(__doc__)
         return 2
+    require_known(args)
     qs = all_queries()
     spark = get_spark("dump_cells")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
-        )
+    con = oracle_connection(sf_dir)
     print(f"duckdb={duckdb.__version__}  spark={spark.version}  sf_dir={sf_dir}")
     for name in args:
         qd = qs[name]
         print(f"\n=== {name} ===")
-        sdf = qd.builder(spark, sf_dir)
-        scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
+        scols, srows = spark_result(qd.builder(spark, sf_dir))
         sfp = result_fingerprint(scols, srows)
         print(f"spark : rows={sfp[0]} cols={sfp[1]} hash={sfp[2]}")
         if qd.oracle is None:
             print("(no oracle)")
             continue
-        cur = con.execute(resolve_oracle(qd.oracle, sf_dir))
-        ocols = [d[0] for d in cur.description]
-        orows = cur.fetchall()
+        ocols, orows = oracle_result(con, sf_dir, qd.oracle)
         ofp = result_fingerprint(ocols, orows)
         print(f"duckdb: rows={ofp[0]} cols={ofp[1]} hash={ofp[2]}")
         print(f"match : {sfp == ofp}")

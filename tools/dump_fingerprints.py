@@ -19,20 +19,19 @@ import json
 import sys
 from pathlib import Path
 
-import duckdb
-
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from parquet_storage_query_spark.catalog import TABLES, table_path
-from parquet_storage_query_spark.fingerprint import result_fingerprint
-from parquet_storage_query_spark.registry import all_queries, resolve_oracle
+from parquet_storage_query_spark.fingerprint import (
+    oracle_connection,
+    oracle_result,
+    result_fingerprint,
+    spark_result,
+)
+from parquet_storage_query_spark.registry import all_queries
 from parquet_storage_query_spark.session import get_spark
 
 SCALES = {"sf0.001": "/root/testdata/sf0.001", "sf0.01": "/root/testdata/sf0.01"}
-
-
-def pandas_rows(pdf) -> list[tuple]:
-    return [tuple(r) for r in pdf.itertuples(index=False, name=None)]
+MODES = {"native": False, "pandas": True}
 
 
 def main() -> int:
@@ -43,38 +42,21 @@ def main() -> int:
     head = list(qs)[:n_head]
     out: dict[str, dict] = {}
     for sf_name, sf_dir in SCALES.items():
-        con = duckdb.connect()
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
-            )
+        con = oracle_connection(sf_dir)
         for name in head:
             qd = qs[name]
             rec = out.setdefault(name, {}).setdefault(sf_name, {})
             try:
                 sdf = qd.builder(spark, sf_dir)
-                scols = sdf.columns
-                native_rows = [tuple(r) for r in sdf.collect()]
-                pd_rows = pandas_rows(sdf.toPandas())
-                rec["rows"] = len(native_rows)
-                s_native = result_fingerprint(scols, native_rows)[2]
-                s_pandas = result_fingerprint(scols, pd_rows)[2]
-                if qd.oracle is None:
-                    rec["native"] = {"spark": s_native, "oracle": None, "match": None}
-                    rec["pandas"] = {"spark": s_pandas, "oracle": None, "match": None}
-                    continue
-                sql = resolve_oracle(qd.oracle, sf_dir)
-                cur = con.execute(sql)
-                ocols = [d[0] for d in cur.description]
-                o_native = result_fingerprint(ocols, cur.fetchall())[2]
-                opdf = con.sql(sql).df()
-                o_pandas = result_fingerprint(list(opdf.columns), pandas_rows(opdf))[2]
-                rec["native"] = {
-                    "spark": s_native, "oracle": o_native, "match": s_native == o_native,
-                }
-                rec["pandas"] = {
-                    "spark": s_pandas, "oracle": o_pandas, "match": s_pandas == o_pandas,
-                }
+                for mode, pandas in MODES.items():
+                    scols, srows = spark_result(sdf, pandas)
+                    rec.setdefault("rows", len(srows))
+                    s_hash = result_fingerprint(scols, srows)[2]
+                    if qd.oracle is None:
+                        rec[mode] = {"spark": s_hash, "oracle": None, "match": None}
+                        continue
+                    o_hash = result_fingerprint(*oracle_result(con, sf_dir, qd.oracle, pandas))[2]
+                    rec[mode] = {"spark": s_hash, "oracle": o_hash, "match": s_hash == o_hash}
             except Exception as e:  # noqa: BLE001
                 rec["error"] = str(e)[:200]
         con.close()

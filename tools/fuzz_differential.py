@@ -695,16 +695,14 @@ def build_sql(spec: Spec) -> str:
 
 
 def run_fuzz(spark: SparkSession, sf_dir: str, n_specs: int, seed: int) -> list[Spec]:
-    import duckdb
+    from parquet_storage_query_spark.fingerprint import (
+        oracle_connection,
+        oracle_result,
+        result_fingerprint,
+        spark_result,
+    )
 
-    from parquet_storage_query_spark.catalog import table_path
-    from parquet_storage_query_spark.fingerprint import result_fingerprint
-
-    con = duckdb.connect()
-    for t in set(TABLE_COLS) | {j[0] for j in JOINS.values()} | {"documents"}:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
-        )
+    con = oracle_connection(sf_dir)
     rng = random.Random(seed)
     mismatches: list[Spec | WindowSpec | SetOpSpec | OuterJoinSpec | ExprSpec | ArraySpec | DatetimeSpec] = []
     for i in range(n_specs):
@@ -737,14 +735,11 @@ def run_fuzz(spark: SparkSession, sf_dir: str, n_specs: int, seed: int) -> list[
             spec = gen_spec(rng)
             sdf = build_spark(spec, spark, sf_dir)
             sql = build_sql(spec)
-        srows = [tuple(r) for r in sdf.collect()]
-        cur = con.execute(sql)
-        ocols = [d[0] for d in cur.description]
-        orows = cur.fetchall()
-        ok = result_fingerprint(sdf.columns, srows) == result_fingerprint(ocols, orows)
+        ok = result_fingerprint(*spark_result(sdf)) == result_fingerprint(*oracle_result(con, sf_dir, sql))
         if not ok:
             mismatches.append(spec)
             print(f"MISMATCH [{i}]: {spec.describe()}\n  sql: {sql}")
+    con.close()
     return mismatches
 
 

@@ -22,7 +22,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from parquet_storage_query_spark.registry import all_queries
+from parquet_storage_query_spark.registry import all_queries, require_known
 from parquet_storage_query_spark.session import get_spark
 
 
@@ -82,6 +82,7 @@ def audit_plan(plan: str) -> dict[str, object]:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
+    require_known(only)
     spark = get_spark("plan_audit")
     flagged = 0
     for name, qd in sorted(all_queries().items()):

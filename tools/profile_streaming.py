@@ -34,6 +34,9 @@ def main() -> None:
     args, confs = split_args(sys.argv[1:])
     sf_dir = args[0]
     names = args[1:]
+    from parquet_storage_query_spark.registry import all_queries, require_known
+
+    require_known(names)
 
     import tempfile
     import os
@@ -45,7 +48,6 @@ def main() -> None:
 
     atexit.register(lambda: shutil.rmtree(idx, ignore_errors=True))
 
-    from parquet_storage_query_spark.registry import all_queries
     from parquet_storage_query_spark.session import get_spark
     from parquet_storage_query_spark.streaming import windows as W
 

@@ -32,12 +32,10 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
-import duckdb
-
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from parquet_storage_query_spark.catalog import TABLES, table_path
-from parquet_storage_query_spark.registry import all_queries, resolve_oracle
+from parquet_storage_query_spark.fingerprint import oracle_connection, oracle_query
+from parquet_storage_query_spark.registry import all_queries, require_known
 
 BANNED_PREFIXES = ("HUGEINT", "UHUGEINT", "DECIMAL")
 
@@ -62,17 +60,13 @@ def dtype_family(dt: str) -> str:
 def audit_oracle_types(sf_dir: str, only: set[str] | None = None) -> list[str]:
     """Gate 1: banned DuckDB result types, checked from the oracle alone
     (cheap — no Spark session needed)."""
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
-        )
+    con = oracle_connection(sf_dir)
     problems: list[str] = []
     for name, qd in all_queries().items():
         if qd.oracle is None or (only and name not in only) or name in EXEMPT:
             continue
         try:
-            rel = con.sql(resolve_oracle(qd.oracle, sf_dir))
+            rel = con.sql(oracle_query(sf_dir, qd.oracle))
         except Exception as e:  # noqa: BLE001
             problems.append(f"{name}: oracle error: {str(e)[:120]}")
             continue
@@ -88,18 +82,14 @@ def audit_oracle_types(sf_dir: str, only: set[str] | None = None) -> list[str]:
 
 def audit_pandas_families(spark, sf_dir: str, only: set[str] | None = None) -> list[str]:
     """Gate 2: spark-vs-oracle pandas dtype families per column."""
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
-        )
+    con = oracle_connection(sf_dir)
     problems: list[str] = []
     for name, qd in all_queries().items():
         if qd.oracle is None or (only and name not in only) or name in EXEMPT:
             continue
         try:
             spdf = qd.builder(spark, sf_dir).toPandas()
-            opdf = con.sql(resolve_oracle(qd.oracle, sf_dir)).df()
+            opdf = con.sql(oracle_query(sf_dir, qd.oracle)).df()
         except Exception as e:  # noqa: BLE001
             problems.append(f"{name}: error: {str(e)[:120]}")
             continue
@@ -120,6 +110,7 @@ def audit_pandas_families(spark, sf_dir: str, only: set[str] | None = None) -> l
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:]) or None
+    require_known(only or ())
     problems = audit_oracle_types(sf_dir, only)
     for p in problems:
         print("TYPE ", p)
