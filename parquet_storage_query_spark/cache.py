@@ -2,7 +2,8 @@
 materialized intermediates (``session_frame``, the one way a session keeps
 a DataFrame), trained centroid models (IVF), prepared query plans
 (``prepared``), temp-view registration (SQL builders), and committed
-on-disk artifacts (``ensure_artifact``).
+on-disk artifacts (``ensure_artifact``), keyed by their input files and
+the package's source digest.
 
 Keyed on ``SparkContext.applicationId`` — unique per context for the life of
 the process — NOT ``id(SparkSession)``: a new session can be allocated at a
@@ -104,18 +105,21 @@ def derived_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
 COMMIT_MARKER = "_COMMITTED"
 
 
-def _input_digest(sf_dir: str, version: str, inputs: list[str]) -> str:
-    """Content key of an artifact's SOURCE data + builder version: md5 over
-    every input parquet file's (name, size, mtime_ns). Cheap — a stat per
-    file, no data read — and any regeneration of the corpus (new driver
-    round, different seed, same path) changes it, so a stale artifact can
-    never be read: it lives under a different directory name entirely."""
+def _input_digest(sf_dir: str, inputs: list[str]) -> str:
+    """Content key of an artifact: md5 over the package's source digest
+    (``pkgship.source_digest``, the code that builds it) and every input
+    parquet file's (name, size, mtime_ns). Cheap — a stat per file, no data
+    read — and any regeneration of the corpus (new driver round, different
+    seed, same path) or edit to the package changes it, so a stale artifact
+    can never be read: it lives under a different directory name entirely."""
     import hashlib
     import os
 
+    from .pkgship import source_digest
+
     h = hashlib.md5()
     h.update(sf_dir.encode())
-    h.update(version.encode())
+    h.update(source_digest().encode())
     for path in sorted(inputs):
         files = []
         if os.path.isdir(path):
@@ -133,20 +137,20 @@ def ensure_artifact(
     spark: SparkSession,
     sf_dir: str,
     tag: str,
-    version: str,
     inputs: list[str],
     build: Callable[[str], None],
 ) -> str:
     """Build-once-serve-forever protocol for on-disk artifacts (standing
-    rollups, partitioned layouts, corpus egests): returns a COMMITTED
-    directory whose name embeds a digest of the source data + builder
-    version.
+    rollups, partitioned layouts, corpus egests, binary fixtures): returns
+    a COMMITTED directory whose name embeds a digest of the source data and
+    the package source.
 
     Guarantees, in order of the failure they close:
     - **Staleness-proof**: the digest covers every input file's size and
-      mtime, so regenerated source data (or a changed builder) maps to a
-      NEW path — a leftover artifact from older data is unreachable, not
-      silently served.
+      mtime and the digest of the package's source, so regenerated source
+      data or any edit to the code maps to a NEW path — a leftover
+      artifact from older data or an older builder is unreachable, not
+      silently served. No builder carries a version to bump.
     - **Crash/torn-write-proof**: the artifact is built in a unique temp
       dir, the commit marker is written LAST inside it, and the temp dir
       is renamed into place atomically. A reader either sees a fully
@@ -166,7 +170,7 @@ def ensure_artifact(
     import time
     import uuid
 
-    digest = _input_digest(sf_dir, version, inputs)
+    digest = _input_digest(sf_dir, inputs)
 
     def ensure() -> str:
         base = _artifact_base()

@@ -1121,7 +1121,7 @@ def prep_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         dest = ensure_artifact(
-            spark, sf_dir, "evolving", "v2", [table_path(sf_dir, "documents")], build_layout
+            spark, sf_dir, "evolving", [table_path(sf_dir, "documents")], build_layout
         )
         return (
             read_evolving(spark, dest)
@@ -1850,7 +1850,7 @@ def ensure_daily_rollup(spark: SparkSession, sf_dir: str) -> str:
         )
 
     return ensure_artifact(
-        spark, sf_dir, "daily_rollup", "v2", [table_path(sf_dir, "events")], build
+        spark, sf_dir, "daily_rollup", [table_path(sf_dir, "events")], build
     )
 
 
@@ -1940,7 +1940,7 @@ def ensure_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
         )
 
     return ensure_artifact(
-        spark, sf_dir, "events_by_day", "v2", [table_path(sf_dir, "events")], build
+        spark, sf_dir, "events_by_day", [table_path(sf_dir, "events")], build
     )
 
 
@@ -2213,7 +2213,7 @@ def source_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     dest = ensure_artifact(
-        spark, sf_dir, "jsonl_corpus", "v3", [table_path(sf_dir, "documents")], build
+        spark, sf_dir, "jsonl_corpus", [table_path(sf_dir, "documents")], build
     )
     jsonl_source.register(spark)
     docs = spark.read.format("jsonl_corpus").option("path", dest).load()
@@ -2283,7 +2283,7 @@ def source_jsonl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     dest = ensure_artifact(
-        spark, sf_dir, "jsonl_corpus", "v3", [table_path(sf_dir, "documents")], build
+        spark, sf_dir, "jsonl_corpus", [table_path(sf_dir, "documents")], build
     )
     jsonl_source.register(spark)
     docs = spark.readStream.format("jsonl_corpus").option("path", dest).load()
@@ -2382,7 +2382,6 @@ def sink_jsonl_stream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "jsonl_stream_sink",
-        "v1",
         [table_path(sf_dir, "documents")],
         build,
     )
@@ -2449,7 +2448,7 @@ def sink_jsonl_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     dest = ensure_artifact(
-        spark, sf_dir, "jsonl_sink", "v2", [table_path(sf_dir, "documents")], build
+        spark, sf_dir, "jsonl_sink", [table_path(sf_dir, "documents")], build
     )
     jsonl_source.register(spark)
     import os
@@ -2520,7 +2519,7 @@ def sink_jsonl_codec_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     dest = ensure_artifact(
-        spark, sf_dir, "jsonl_codecs", "v1", [table_path(sf_dir, "documents")], build
+        spark, sf_dir, "jsonl_codecs", [table_path(sf_dir, "documents")], build
     )
     jsonl_source.register(spark)
     parts = []
@@ -3980,7 +3979,6 @@ def ensure_zordered_events(spark: SparkSession, sf_dir: str) -> str:
         spark,
         sf_dir,
         "zorder_events_physical",
-        "v1",
         [table_path(sf_dir, "events")],
         build,
     )
@@ -4520,7 +4518,7 @@ def source_csvgz_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     dest = ensure_artifact(
-        spark, sf_dir, "orders_csvgz", "v2", [table_path(sf_dir, "orders")], build
+        spark, sf_dir, "orders_csvgz", [table_path(sf_dir, "orders")], build
     )
     orders = (
         spark.read.option("header", True)
@@ -4671,8 +4669,8 @@ def prep_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     inputs = [table_path(sf_dir, "documents")]
-    base = ensure_artifact(spark, sf_dir, "mor_base", "v1", inputs, build_base)
-    delta = ensure_artifact(spark, sf_dir, "mor_delta", "v1", inputs, build_delta)
+    base = ensure_artifact(spark, sf_dir, "mor_base", inputs, build_base)
+    delta = ensure_artifact(spark, sf_dir, "mor_delta", inputs, build_delta)
     merged = (
         spark.read.parquet(base)
         .unionByName(spark.read.parquet(delta))
@@ -5514,7 +5512,7 @@ def source_fixedwidth_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     dest = ensure_artifact(
-        spark, sf_dir, "orders_fixedwidth", "v1", [table_path(sf_dir, "orders")], build
+        spark, sf_dir, "orders_fixedwidth", [table_path(sf_dir, "orders")], build
     )
     t = spark.read.text(dest)
     carved = t.select(
@@ -5577,7 +5575,6 @@ def ensure_join_view_base(spark: SparkSession, sf_dir: str) -> str:
         spark,
         sf_dir,
         "join_view_base",
-        "v1",
         [table_path(sf_dir, "orders"), table_path(sf_dir, "customer")],
         build,
     )
@@ -5762,7 +5759,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     dest = ensure_artifact(
-        spark, sf_dir, "orders_xml", "v1", [table_path(sf_dir, "orders")], build
+        spark, sf_dir, "orders_xml", [table_path(sf_dir, "orders")], build
     )
     x = (
         spark.read.format("xml")

@@ -1620,7 +1620,7 @@ def ensure_demo_index(spark: SparkSession, sf_dir: str) -> str:
     # to a new index path immediately (review finding: the extra layer
     # froze the first call's digest for the whole session)
     return ensure_artifact(
-        spark, sf_dir, "sig_index", "v2", [table_path(sf_dir, "documents")], build_index
+        spark, sf_dir, "sig_index", [table_path(sf_dir, "documents")], build_index
     )
 
 
@@ -1887,7 +1887,7 @@ def dedup_index_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_signature_index(docs.filter(F.col("doc_id") % INCR_BATCH_MOD == 0), d)
 
     dest = ensure_artifact(
-        spark, sf_dir, "asof_index", "v2", [table_path(sf_dir, "documents")], build
+        spark, sf_dir, "asof_index", [table_path(sf_dir, "documents")], build
     )
     out = None
     for v in (1, 2):
@@ -1946,7 +1946,7 @@ def dedup_index_read_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_signature_index(new_shard, d)
 
     dest = ensure_artifact(
-        spark, sf_dir, "asof_torn_index", "v1", [table_path(sf_dir, "documents")], build
+        spark, sf_dir, "asof_torn_index", [table_path(sf_dir, "documents")], build
     )
     out = None
     for v in (1, 2):

@@ -753,36 +753,33 @@ def _fixture_shards(spark: SparkSession, sf_dir: str) -> int:
     return max(8, min(64, n // 1500))
 
 
-# The binary fixture table: artifact tag -> (version, binary column
-# names, per-document encoder). A committed artifact is found again by its
-# tag and the digest of (corpus, version) alone, so the version pins the
-# encoder's BYTES: an encoder change that keeps its version serves the old
-# bytes wherever the old artifact is committed, and new bytes elsewhere.
-_FIXTURES: dict[str, tuple[str, tuple[str, ...], Callable]] = {}
+# The binary fixture table: artifact tag -> (binary column names,
+# per-document encoder).
+_FIXTURES: dict[str, tuple[tuple[str, ...], Callable]] = {}
 
 
-def _fixture(tag: str, version: str, *cols: str) -> Callable:
+def _fixture(tag: str, *cols: str) -> Callable:
     """Register the decorated `encode(doc_id)` as fixture table `tag`;
     it returns one binary value per column in `cols` (a tuple when there
     are several)."""
 
     def register(encode: Callable) -> Callable:
-        _FIXTURES[tag] = (version, cols, encode)
+        _FIXTURES[tag] = (cols, encode)
         return encode
 
     return register
 
 
 def _binary_fixture(spark: SparkSession, sf_dir: str, tag: str) -> str:
-    """Write (once per corpus version) fixture table `tag` — one REAL
-    binary payload per document id in each of its columns — through the
-    committed-artifact protocol, and return its path. The binary-column
-    parquet layout is exactly how a multimodal corpus ships image, audio
-    and video payloads."""
+    """Write (once per corpus and package source) fixture table `tag` —
+    one REAL binary payload per document id in each of its columns —
+    through the committed-artifact protocol, and return its path. The
+    binary-column parquet layout is exactly how a multimodal corpus ships
+    image, audio and video payloads."""
     from ..cache import ensure_artifact
     from ..catalog import table_path
 
-    version, cols, encode = _FIXTURES[tag]
+    cols, encode = _FIXTURES[tag]
 
     def build(dest: str) -> None:
         # corpus-scaled shards (see _fixture_shards): the 30x probe caught
@@ -810,9 +807,7 @@ def _binary_fixture(spark: SparkSession, sf_dir: str, tag: str) -> str:
         schema = ", ".join(["doc_id long"] + [f"{c} binary" for c in cols])
         ids.mapInPandas(gen, schema=schema).write.mode("overwrite").parquet(dest)
 
-    return ensure_artifact(
-        spark, sf_dir, tag, version, [table_path(sf_dir, "documents")], build
-    )
+    return ensure_artifact(spark, sf_dir, tag, [table_path(sf_dir, "documents")], build)
 
 
 def _per_row(
@@ -835,7 +830,7 @@ def _per_row(
     return df.mapInPandas(kernel, schema=schema)
 
 
-@_fixture("png_fixture", "v3", "png")
+@_fixture("png_fixture", "png")
 def _png_fixture(doc_id: int) -> bytes:
     import numpy as np
 
@@ -912,7 +907,7 @@ BMP_H_BASE, BMP_H_MOD = 6, 7
 BMP_A, BMP_B = 17, 13  # pixel byte k of doc d: (d*BMP_A + k*BMP_B) % 256
 
 
-@_fixture("bmp_fixture", "v1", "bmp")
+@_fixture("bmp_fixture", "bmp")
 def _bmp_fixture(d: int) -> bytes:
     """One REAL 24-bit BI_RGB bitmap, alternating bottom-up and top-down
     row storage by doc parity so BOTH orientation paths run under the
@@ -1005,7 +1000,7 @@ JPG_BH_BASE, JPG_BH_MOD = 2, 2  # blocks high: 2..3  (height 16..24)
 JPG_A, JPG_B = 11, 7  # block value v(b) = (doc_id*A + B*b) % 256
 
 
-@_fixture("jpeg_fixture", "v3", "jpg")
+@_fixture("jpeg_fixture", "jpg")
 def _jpeg_fixture(doc_id: int) -> bytes:
     from .jpeg import encode_jpeg_blocks
 
@@ -1092,7 +1087,7 @@ JP4_MH_BASE, JP4_MH_MOD = 1, 3  # MCUs high: 1..3  (height 16..48)
 JP4_A, JP4_B, JP4_C = 13, 5, 89  # channel c of MCU m: (id*A + B*m + C*c) % 256
 
 
-@_fixture("jpeg420_fixture", "v1", "jpg")
+@_fixture("jpeg420_fixture", "jpg")
 def _jpeg420_fixture(doc_id: int) -> bytes:
     from .jpeg import encode_jpeg_color
 
@@ -1190,7 +1185,7 @@ JPR_MH_BASE, JPR_MH_MOD = 1, 3  # MCUs high: 1..3
 JPR_A, JPR_B, JPR_C = 17, 3, 71  # channel c of MCU m: (id*A + B*m + C*c) % 256
 
 
-@_fixture("jpeg_prog_fixture", "v1", "jpg")
+@_fixture("jpeg_prog_fixture", "jpg")
 def _jpeg_progressive_fixture(doc_id: int) -> bytes:
     from .jpeg import encode_jpeg_progressive_color
 
@@ -1262,7 +1257,7 @@ JAR_BH_BASE, JAR_BH_MOD = 2, 3  # blocks high: 2..4  (height 16..32)
 JAR_A, JAR_B = 23, 9  # block value v(b) = (doc_id*A + B*b) % 256
 
 
-@_fixture("jpeg_arith_fixture", "v1", "jpg")
+@_fixture("jpeg_arith_fixture", "jpg")
 def _jpeg_arith_fixture(doc_id: int) -> bytes:
     from .jpeg_arith import encode_jpeg_arith_blocks
 
@@ -1329,7 +1324,7 @@ JAP_BH_BASE, JAP_BH_MOD = 2, 2  # blocks high: 2..3  (height 16..24)
 JAP_A, JAP_B = 29, 13  # block value v(b) = (doc_id*A + B*b) % 256
 
 
-@_fixture("jpeg_arith_prog_fixture", "v1", "jpg")
+@_fixture("jpeg_arith_prog_fixture", "jpg")
 def _jpeg_arith_prog_fixture(doc_id: int) -> bytes:
     """REAL arithmetic-coded PROGRESSIVE (SOF10) JPEG — three QM-coded
     scans per stream (DC first at Al=1, DC refinement, AC band EOB)."""
@@ -1399,7 +1394,7 @@ JLL_H_BASE, JLL_H_MOD = 7, 6  # height 7..12
 JLL_A, JLL_B = 37, 11  # pixel i of doc d: (d*A + B*i) % 256
 
 
-@_fixture("jpeg_lossless_fixture", "v1", "jpg")
+@_fixture("jpeg_lossless_fixture", "jpg")
 def _jpeg_lossless_fixture(doc_id: int) -> bytes:
     from .jpeg import encode_jpeg_lossless
 
@@ -1491,7 +1486,7 @@ JHR_V_A, JHR_V_B = 41, 64  # base value v0(d) = 64 + (d*41) % 64  (64..127)
 JHR_R_A, JHR_R_B = 17, 13  # residual r(d,b) = ((d*17 + b*13) % 121) - 60
 
 
-@_fixture("jpeg_hier_fixture", "v1", "jpg")
+@_fixture("jpeg_hier_fixture", "jpg")
 def _jpeg_hier_fixture(doc_id: int) -> bytes:
     """REAL hierarchical JPEG stream: DHP + half-resolution SOF0 initial
     frame + EXP + SOF5 differential frame."""
@@ -1560,7 +1555,7 @@ JLA_H_BASE, JLA_H_MOD = 6, 5  # height 6..10
 JLA_A, JLA_B = 53, 19  # pixel i of doc d: (d*A + B*i) % 256
 
 
-@_fixture("jpeg_lossless_arith_fixture", "v1", "jpg")
+@_fixture("jpeg_lossless_arith_fixture", "jpg")
 def _jpeg_lossless_arith_fixture(doc_id: int) -> bytes:
     from .jpeg_arith import encode_jpeg_lossless_arith
 
@@ -1623,7 +1618,7 @@ J16_H_BASE, J16_H_MOD = 5, 5  # height 5..9
 J16_A, J16_B = 811, 157  # pixel i of doc d: (d*A + B*i) % 4096
 
 
-@_fixture("jpeg_lossless16_fixture", "v1", "jpg")
+@_fixture("jpeg_lossless16_fixture", "jpg")
 def _jpeg_lossless16_fixture(doc_id: int) -> bytes:
     # alternate entropy layer by doc parity: even docs Huffman (SOF3 with
     # the 17-symbol SSSS table), odd docs arithmetic (SOF11)
@@ -1699,7 +1694,7 @@ J12_BH_BASE, J12_BH_MOD = 2, 2  # blocks high 2..3
 J12_A, J12_B = 997, 313  # block b of doc d: (d*A + B*b) % 4096
 
 
-@_fixture("jpeg12_fixture", "v2", "jpg")
+@_fixture("jpeg12_fixture", "jpg")
 def _jpeg12_fixture(doc_id: int) -> bytes:
     # cycle the DCT process AND entropy layer by doc_id % 4: 0 = Huffman
     # extended sequential SOF1 (restart markers every 2 MCUs on every
@@ -1795,7 +1790,7 @@ JHK_V_A, JHK_V_B = 43, 64  # base value v0(d) = 64 + (d*43) % 64
 JHK_R_A, JHK_R_B = 19, 11  # residual r(d,b) = ((d*19 + b*11) % 121) - 60
 
 
-@_fixture("jpeg_hier_kinds_fixture", "v1", "jpg")
+@_fixture("jpeg_hier_kinds_fixture", "jpg")
 def _jpeg_hier_kinds_fixture(doc_id: int) -> bytes:
     """Hierarchical JPEG stream cycling ALL SIX differential frame types
     by doc_id."""
@@ -2167,7 +2162,7 @@ G11_N_BASE, G11_N_MOD = 400, 257  # samples per clip: 400..656
 G11_A, G11_B = 29, 13
 
 
-@_fixture("g711_fixture", "v1", "mu", "al")
+@_fixture("g711_fixture", "mu", "al")
 def _g711_fixture(doc_id: int) -> tuple[bytes, bytes]:
     """REAL G.711 WAV clips: a μ-law and an A-law twin of the same
     companded byte stream."""
@@ -2263,7 +2258,7 @@ ADPCM_IA, ADPCM_IB = 1, 13  # idx0(d,b)  = (d*IA + IB*b) % 89
 ADPCM_NA, ADPCM_NB_, ADPCM_NC = 7, 5, 3  # nib(d,b,t) = (d*NA+NB*b+NC*t)%16
 
 
-@_fixture("adpcm_fixture", "v1", "wav")
+@_fixture("adpcm_fixture", "wav")
 def _adpcm_fixture(doc_id: int) -> bytes:
     """One REAL format-17 WAV whose nibble stream, per-block seed
     predictor, and step index are closed forms of (doc_id, block), so
@@ -2425,7 +2420,7 @@ WAV_N_BASE, WAV_N_MOD = 400, 600
 WAV_RATES = 2000  # rate = 8000 + (d % 5) * WAV_RATES
 
 
-@_fixture("wav_fixture", "v3", "wav")
+@_fixture("wav_fixture", "wav")
 def _wav_fixture(doc_id: int) -> bytes:
     """One real RIFF/PCM16 clip."""
     import numpy as np
@@ -2599,7 +2594,7 @@ GIF_W_BASE, GIF_W_MOD = 16, 17  # width 16..32
 GIF_H_BASE, GIF_H_MOD = 12, 13  # height 12..24
 
 
-@_fixture("gif_fixture", "v1", "gif")
+@_fixture("gif_fixture", "gif")
 def _gif_fixture(doc_id: int) -> bytes:
     import numpy as np
 
@@ -2684,7 +2679,7 @@ GFA_F_BASE, GFA_F_MOD = 2, 4  # frames 2..5
 GFA_DELAY = 4  # centiseconds per frame
 
 
-@_fixture("gif_anim_fixture", "v1", "gif")
+@_fixture("gif_anim_fixture", "gif")
 def _gif_anim_fixture(doc_id: int) -> bytes:
     import numpy as np
 
@@ -2774,7 +2769,7 @@ FLC_RATES = 4000  # rate = 8000 + (d % 4) * FLC_RATES
 FLC_BLOCK = 256
 
 
-@_fixture("flac_fixture", "v1", "flac")
+@_fixture("flac_fixture", "flac")
 def _flac_fixture(doc_id: int) -> bytes:
     """One REAL FLAC stream: fixed-predictor subframes, rice residuals,
     CRC-8/16, STREAMINFO MD5."""
@@ -3953,7 +3948,7 @@ TIF_H_BASE, TIF_H_MOD = 5, 9
 TIF_A, TIF_B = 23, 19  # pixel byte k of doc d: (d*TIF_A + k*TIF_B) % 256
 
 
-@_fixture("tiff_fixture", "v3", "tif")
+@_fixture("tiff_fixture", "tif")
 def _tiff_fixture(d: int) -> bytes:
     """One REAL strip-organized TIFF, sweeping compression (LZW /
     uncompressed / PackBits, round 11) x horizontal-predictor x
@@ -4307,7 +4302,7 @@ GS_F_BASE, GS_F_MOD = 7, 5  # frames 7..11 (>= 2 cuts guaranteed)
 GS_THRESH = 8  # boundary iff mean abs pixel delta > GS_THRESH
 
 
-@_fixture("gif_shots_fixture", "v1", "gif")
+@_fixture("gif_shots_fixture", "gif")
 def _gif_shots_fixture(d: int) -> bytes:
     """One REAL animated GIF with SHOT structure — runs of GS_LEN
     identical frames separated by hard cuts (a constant value shift),
@@ -4426,7 +4421,7 @@ PNV_IA, PNV_IB = 13, 5  # palette index of pixel i: (d*IA + i*IB) % 64
 PNV_PR, PNV_PG, PNV_PB = 17, 29, 41  # (k*Pc + c_mult*d) % 256, c_mult=1/2/3
 
 
-@_fixture("png_variants_fixture", "v1", "png")
+@_fixture("png_variants_fixture", "png")
 def _png_variant_fixture(doc_id: int) -> bytes:
     d = int(doc_id)
     w = PNV_W_BASE + d % PNV_W_MOD
@@ -4551,7 +4546,7 @@ def encode_wav_pcm(fmt_code: int, bits: int, payload: bytes, rate: int = 8000) -
     return b"RIFF" + struct.pack("<I", len(riff)) + riff
 
 
-@_fixture("pcm_depth_fixture", "v1", "wav")
+@_fixture("pcm_depth_fixture", "wav")
 def _pcm_depth_fixture(doc_id: int) -> bytes:
     import numpy as np
 
@@ -4633,7 +4628,7 @@ BMI_IA, BMI_IB = 11, 7  # pixel i index: (d*IA + (i DIV rep)*IB) % 64
 BMI_PR, BMI_PG, BMI_PB = 19, 31, 43  # palette entry channels
 
 
-@_fixture("bmp_indexed_fixture", "v1", "bmp")
+@_fixture("bmp_indexed_fixture", "bmp")
 def _bmp_indexed_fixture(doc_id: int) -> bytes:
     d = int(doc_id)
     w = BMI_W_BASE + d % BMI_W_MOD
@@ -4945,7 +4940,7 @@ def _avi_jpeg_frames(d: int) -> tuple[int, int, list[bytes]]:
     return bw, bh, frames
 
 
-@_fixture("avi_fixture", "v1", "avi")
+@_fixture("avi_fixture", "avi")
 def _avi_fixture(d: int) -> bytes:
     """One REAL AVI/MJPEG video — every frame a genuine baseline JPEG
     muxed through the RIFF writer."""
@@ -5041,7 +5036,7 @@ AV_SPF = 40
 AV_RATE = 8000
 
 
-@_fixture("avi_av_fixture", "v1", "avi")
+@_fixture("avi_av_fixture", "avi")
 def _avi_av_fixture(d: int) -> bytes:
     """One interleaved A/V AVI — the MJPEG video of `_avi_fixture` plus
     a mono PCM16 `auds` stream, chunks interleaved 00dc/01wb per frame."""

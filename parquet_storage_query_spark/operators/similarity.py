@@ -1102,7 +1102,6 @@ def ensure_ann_index(spark: SparkSession, sf_dir: str) -> str:
         spark,
         sf_dir,
         "ann_index",
-        "v2",
         [table_path(sf_dir, "embeddings")],
         lambda dest: write_ann_index(spark, sf_dir, dest),
     )

@@ -18,6 +18,7 @@ opting into get_spark."""
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 import tempfile
@@ -28,10 +29,9 @@ _SHIPPED: set[str] = set()  # applicationIds already shipped to
 _LOCK = threading.Lock()
 
 
-def _package_zip() -> str:
-    """Build (or reuse) the content-addressed zip of this package's .py
-    sources. Deterministic: same sources → same path, so concurrent
-    sessions share one file; the write is tmp-then-rename atomic."""
+def _sources() -> list[tuple[str, str]]:
+    """(archive name, file path) of every .py file of this package, sorted
+    by archive name."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)
     entries = []
@@ -41,12 +41,33 @@ def _package_zip() -> str:
                 full = os.path.join(root, f)
                 rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
                 entries.append((rel, full))
+    return sorted(entries)
+
+
+@functools.cache
+def source_digest() -> str:
+    """md5 over the archive name and bytes of every .py file of this
+    package: the one name of the code a process runs. It names the worker
+    zip, and it keys every committed artifact (``cache.ensure_artifact``),
+    so an edit anywhere in the package rebuilds each artifact on its next
+    use instead of serving bytes an older builder wrote. Read once per
+    process (about 5 ms for the whole package), so per-call artifact
+    lookups read no source files; an edit made while a process runs
+    takes effect in the next process."""
     h = hashlib.md5()
-    for rel, full in sorted(entries):
+    for rel, full in _sources():
         h.update(rel.encode())
         with open(full, "rb") as fh:
             h.update(fh.read())
-    dest = os.path.join(tempfile.gettempdir(), f"psqs_pkg_{h.hexdigest()[:16]}.zip")
+    return h.hexdigest()
+
+
+def _package_zip() -> str:
+    """Build (or reuse) the zip of this package's .py sources, named by
+    ``source_digest``. Deterministic: same sources → same path, so
+    concurrent sessions share one file; the write is tmp-then-rename
+    atomic."""
+    dest = os.path.join(tempfile.gettempdir(), f"psqs_pkg_{source_digest()[:16]}.zip")
     if os.path.exists(dest):
         return dest
     # uuid-unique tmp: concurrent builders (threads of one pid included)
@@ -56,7 +77,7 @@ def _package_zip() -> str:
 
     tmp = f"{dest}.tmp{uuid.uuid4().hex}"
     with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-        for rel, full in sorted(entries):
+        for rel, full in _sources():
             # fixed timestamp → byte-stable zip for a given source tree
             info = zipfile.ZipInfo(rel, date_time=(2020, 1, 1, 0, 0, 0))
             with open(full, "rb") as fh:

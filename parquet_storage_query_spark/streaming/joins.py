@@ -331,7 +331,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     stream_dir = ensure_artifact(
-        spark, sf_dir, "incr_stream", "v2", [table_path(sf_dir, "documents")], stage
+        spark, sf_dir, "incr_stream", [table_path(sf_dir, "documents")], stage
     )
     idx_sigs, idx_bands = read_signature_index(spark, index_dir)
 
@@ -397,7 +397,6 @@ def _join_view_delta_shards(spark: SparkSession, sf_dir: str) -> str:
         spark,
         sf_dir,
         "join_view_delta_shards",
-        "v1",
         [table_path(sf_dir, "orders")],
         build,
     )
@@ -523,7 +522,7 @@ def _cdc_log_shards(spark: SparkSession, sf_dir: str) -> str:
         )
 
     return ensure_artifact(
-        spark, sf_dir, "cdc_log_shards", "v1", [table_path(sf_dir, "orders")], build
+        spark, sf_dir, "cdc_log_shards", [table_path(sf_dir, "orders")], build
     )
 
 

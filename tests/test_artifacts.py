@@ -13,7 +13,7 @@ import time
 
 import pytest
 
-from parquet_storage_query_spark import cache
+from parquet_storage_query_spark import cache, pkgship
 from parquet_storage_query_spark.cache import COMMIT_MARKER, ensure_artifact
 
 from .conftest import SF_SMOKE
@@ -36,7 +36,7 @@ def _clear_memo():
         cache._KEY_LOCKS.clear()
 
 
-def test_artifact_commit_reuse_stale_and_torn(spark, art_env):
+def test_artifact_commit_reuse_stale_and_torn(spark, art_env, monkeypatch):
     src = art_env
     calls: list[str] = []
 
@@ -46,7 +46,7 @@ def test_artifact_commit_reuse_stale_and_torn(spark, art_env):
         with open(os.path.join(dest, "part.txt"), "w") as fh:
             fh.write("artifact")
 
-    args = (spark, str(src), "t", "v1", [str(src)])
+    args = (spark, str(src), "t", [str(src)])
     p1 = ensure_artifact(*args, build)
     assert os.path.exists(os.path.join(p1, COMMIT_MARKER))
     assert len(calls) == 1
@@ -73,10 +73,16 @@ def test_artifact_commit_reuse_stale_and_torn(spark, art_env):
     assert len(calls) == 3
     assert os.path.exists(os.path.join(p3, COMMIT_MARKER))
 
-    # builder-version bump: new dir too (changed logic never reads old data)
+    # package-source edit: a new source digest keys a new dir and builds
+    # once (changed logic never reads old data); the same digest after a
+    # restart serves that dir without a rebuild
+    monkeypatch.setattr(pkgship, "source_digest", lambda: "edited-source")
     _clear_memo()
-    p4 = ensure_artifact(spark, str(src), "t", "v2", [str(src)], build)
+    p4 = ensure_artifact(*args, build)
     assert p4 not in (p1, p2)
+    assert len(calls) == 4
+    _clear_memo()
+    assert ensure_artifact(*args, build) == p4
     assert len(calls) == 4
 
 
@@ -99,7 +105,7 @@ def test_artifact_concurrent_builders_single_winner(spark, art_env):
 
     def worker():
         results.append(
-            ensure_artifact(spark, str(src), "race", "v1", [str(src)], build)
+            ensure_artifact(spark, str(src), "race", [str(src)], build)
         )
 
     threads = [threading.Thread(target=worker) for _ in range(8)]
@@ -227,9 +233,7 @@ def test_fixture_artifacts_are_sharded(spark, tmp_path, monkeypatch):
         def build_unsharded(dest: str) -> None:
             spark.range(10).coalesce(1).write.mode("overwrite").parquet(dest)
 
-        dest = cache.ensure_artifact(
-            spark, SF_SMOKE, "unsharded_control", "v1", [], build_unsharded
-        )
+        dest = cache.ensure_artifact(spark, SF_SMOKE, "unsharded_control", [], build_unsharded)
         assert _data_file_count(dest) < 8, "control should be unsharded"
     finally:
         # later tests must not be served paths under this test's tmp dir

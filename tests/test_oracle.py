@@ -8,11 +8,14 @@
    rewrites the oracles' literal `'{sf_dir}/<t>.parquet'` references to the
    folder's glob: the reference queries match on a 4-file micros folder
    and on a 4-file TIMESTAMP(NANOS) folder, in both fetch modes.
+3. `FINGERPRINTS.json` pins the head of the registry: its keys are the
+   first 60 registered queries (`tools/dump_fingerprints.py 60`).
 """
 
 from __future__ import annotations
 
 import ast
+import json
 import re
 from pathlib import Path
 
@@ -70,6 +73,11 @@ def test_only_fingerprint_creates_oracle_views():
     paths = [p for root in ROOTS for p in sorted((REPO / root).rglob("*.py")) if p != ALLOWED]
     sites = corpus_view_sites(paths)
     assert sites == [], f"use fingerprint.oracle_connection instead: {sites}"
+
+
+def test_fingerprints_file_covers_registry_head():
+    pinned = json.loads((REPO / "FINGERPRINTS.json").read_text())
+    assert set(pinned) == set(list(all_queries())[:60])
 
 
 def test_guard_sees_each_way_to_create_a_view(tmp_path):

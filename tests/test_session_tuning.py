@@ -8,6 +8,7 @@
    domain / backlog bytes), honor the env override, and actually reach the
    started streaming query's cloned conf, without leaking into a stream
    started concurrently on another thread.
+3. The default local heap never exceeds the machine's physical memory.
 """
 
 from __future__ import annotations
@@ -241,3 +242,28 @@ def test_unsized_start_never_clones_a_transient_partition_count(
     assert parts == {"t_race_sized_out": 1, "t_race_unsized_out": default}
     assert read["keys"] == default
     assert spark.conf.get("spark.sql.shuffle.partitions") == str(default)
+
+
+def test_default_driver_memory_fits_physical_memory(monkeypatch):
+    """The default heap is the smaller of 16g and half of physical memory:
+    a 16g heap on a 15 GB host got the JVM OOM-killed at sf1. Spark-free:
+    only os.sysconf is faked."""
+    import os
+
+    from parquet_storage_query_spark.session import _default_driver_memory
+
+    page = 4096
+
+    def heap_bytes(phys: int) -> int:
+        sizes = {"SC_PHYS_PAGES": phys // page, "SC_PAGE_SIZE": page}
+        monkeypatch.setattr(os, "sysconf", lambda name: sizes[name])
+        mem = _default_driver_memory()
+        assert mem.endswith("m"), mem
+        return int(mem[:-1]) << 20
+
+    gib = 1 << 30
+    for phys in (2 * gib, 8 * gib, 15 * gib, 31 * gib, 32 * gib, 64 * gib, 512 * gib):
+        assert heap_bytes(phys) <= phys // 2
+    assert heap_bytes(15 * gib) == 15 * gib // 2
+    assert heap_bytes(64 * gib) == 16 * gib
+    assert heap_bytes(512 * gib) == 16 * gib
