@@ -2349,6 +2349,7 @@ def sink_jsonl_stream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import table_path
     from ..sources import jsonl_source
     from ..sources.prep import export_jsonl
+    from ..streaming.windows import drain_stream
 
     def build(dest: str) -> None:
         jsonl_source.register(spark)
@@ -2366,17 +2367,12 @@ def sink_jsonl_stream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .load()
             .filter(F.col("doc_id") % 3 == 1)
         )
-        q = (
+        drain_stream(
             stream.writeStream.format("jsonl_corpus")
             .option("path", out_dir)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
 
     dest = ensure_artifact(
         spark,

@@ -123,15 +123,14 @@ def ref_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ref_per_file_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-blob partial visibility (QO:468 prints per-blob counts): group by
     source file. Hash-checked: DuckDB's `read_parquet(..., filename=true)`
-    exposes the same provenance; both sides project the path down to its
-    basename so Spark's `file:` URI scheme doesn't leak into the compare."""
-    df = load(spark, sf_dir, "events")
+    exposes the same provenance, and the oracle cuts the path down to its
+    basename. Spark groups on the file source's `_metadata.file_name`,
+    which is already the basename: a per-file constant, where a regexp
+    over `input_file_name()` ran once per row."""
     return (
-        df.groupBy(
-            F.regexp_extract(F.input_file_name(), "[^/]+$", 0).alias("file")
-        )
+        load(spark, sf_dir, "events")
+        .groupBy(F.col("_metadata.file_name").alias("file"))
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .select("file", "cnt")
     )
 
 

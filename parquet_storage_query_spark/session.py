@@ -31,7 +31,10 @@ def _enable_py4j_nodelay() -> None:
     paid once per query, not data-path work — the Arrow batch channels the
     executors use are large buffered writes where Nagle is irrelevant.
     Idempotent; patches the connection classes so sockets created later
-    (one per Python thread under the pin-thread ClientServer) inherit it."""
+    (one per Python thread under the pin-thread ClientServer) inherit it,
+    including the ones the JVM opens to Python for callbacks (a
+    `foreachBatch` function calls back into the JVM over its callback
+    connection, which then joins the pool Python calls from)."""
     import contextlib
 
     def _patch(cls, method_name: str) -> None:
@@ -52,6 +55,7 @@ def _enable_py4j_nodelay() -> None:
         from py4j.clientserver import ClientServerConnection
 
         _patch(ClientServerConnection, "connect_to_java_server")
+        _patch(ClientServerConnection, "init_socket_from_python_server")
     with contextlib.suppress(Exception):
         from py4j.java_gateway import GatewayConnection
 

@@ -17,7 +17,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .windows import read_events_stream
+from .windows import drain_stream, read_events_stream
 
 # ---------------------------------------------------------------------------
 # Versioned-snapshot commit for foreachBatch sinks.
@@ -110,19 +110,14 @@ def stream_events_to_parquet(
 ) -> DataFrame:
     """Drain the events stream into a parquet folder (exactly-once via the
     checkpoint) and return a batch DataFrame over the written output."""
-    q = (
+    drain_stream(
         read_events_stream(spark, sf_dir)
         .writeStream.format("parquet")
         .option("path", dest)
         .option("checkpointLocation", checkpoint)
         .option("compression", compression)
         .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.read.parquet(dest)
 
 
@@ -156,8 +151,6 @@ def stream_upsert_to_parquet(
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    from .windows import read_events_stream
-
     _bind_checkpoint(dest, checkpoint)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -182,16 +175,11 @@ def stream_upsert_to_parquet(
         _commit_version(merged, dest, batch_id)
 
     src = stream if stream is not None else read_events_stream(spark, sf_dir)
-    q = (
+    drain_stream(
         src.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return _read_current(spark, dest)
 
 
@@ -250,21 +238,12 @@ def stream_rollup_to_parquet(
     the dashboard query reads O(days × types) rows no matter how much
     raw history exists, and the stream keeps it fresh without any rescan
     (same contract the CDC-apply sink pins for snapshots)."""
-    from pyspark.sql import functions as F
-
-    from .windows import read_events_stream
-
     _bind_checkpoint(dest, checkpoint)
     merge_batch = rollup_merge_batch(spark, dest)
     src = stream if stream is not None else read_events_stream(spark, sf_dir)
-    q = (
+    drain_stream(
         src.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return _read_current(spark, dest)

@@ -24,8 +24,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.readwriter import DataStreamWriter
 
-from ..catalog import load, load_stream
+from ..catalog import ensure_checkpoint_manager, load, load_stream
 from ..registry import query
 
 # ---------------------------------------------------------------------------
@@ -284,7 +285,7 @@ def _state_partitions(
       the bound holds below 2 cores too.
     `SPARK_GRAFT_STREAM_STATE_PARTITIONS` overrides both for cluster
     deployments. The session default is read under the lock that
-    `_run_to_memory` holds while a sized start has it transiently set."""
+    `drain_stream` holds while a sized start has it transiently set."""
     env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
     if env:
         return max(1, int(env))
@@ -312,11 +313,15 @@ def _local_dir_bytes(path: str) -> int:
     return total
 
 
-def _run_to_memory(
-    df: DataFrame, name: str, mode: str, partitions: int | None = None
-) -> DataFrame:
-    spark = df.sparkSession
-    writer = df.writeStream.outputMode(mode).format("memory").queryName(name)
+def drain_stream(writer: DataStreamWriter, partitions: int | None = None) -> None:
+    """Start a configured stream, process everything its sources hold, and
+    stop it: the one way the engine runs a stream. The session the stream
+    starts from checkpoints through Hadoop's FileSystem API unless it names
+    its own checkpoint manager (`catalog.ensure_checkpoint_manager`).
+    `partitions`, when given, is the stream's state-partition count."""
+    # the writer keeps the session of the frame it was made from
+    spark = writer._spark
+    ensure_checkpoint_manager(spark)
     # streaming queries clone the session conf synchronously inside
     # start() (verified: numShufflePartitions in progress == the value
     # set here even after an immediate reset), so a set/start/reset
@@ -340,6 +345,14 @@ def _run_to_memory(
         q.processAllAvailable()
     finally:
         q.stop()
+
+
+def _run_to_memory(
+    df: DataFrame, name: str, mode: str, partitions: int | None = None
+) -> DataFrame:
+    drain_stream(
+        df.writeStream.outputMode(mode).format("memory").queryName(name), partitions
+    )
     return df.sparkSession.table(name)
 
 
@@ -527,11 +540,7 @@ def streaming_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         with lock:
             results["latest"] = ranked
 
-    q = counts.writeStream.outputMode("complete").foreachBatch(rank_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_stream(counts.writeStream.outputMode("complete").foreachBatch(rank_batch))
     rows = results.get("latest", [])
     return spark.createDataFrame(rows, "window_start timestamp, event_type string, n bigint, rk int")
 
@@ -620,11 +629,7 @@ def streaming_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         with lock:
             results["latest"] = rows
 
-    q = hourly.writeStream.outputMode("complete").foreachBatch(score_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_stream(hourly.writeStream.outputMode("complete").foreachBatch(score_batch))
     return spark.createDataFrame(
         results.get("latest", []),
         "event_type string, hour_start timestamp, n bigint, "

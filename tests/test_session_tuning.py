@@ -3,7 +3,8 @@
 1. The py4j TCP_NODELAY patch (r11's broadest win: every Column/DataFrame
    call is a tiny write-read ping-pong that Nagle+delayed-ACK stalls) must
    stay applied — a py4j upgrade that renames the patched methods would
-   silently revert it.
+   silently revert it — also on the callback connections the JVM opens to
+   Python for `foreachBatch` functions.
 2. The stream state-partition sizing helper must stay data-derived (key
    domain / backlog bytes), honor the env override, and actually reach the
    started streaming query's cloned conf, without leaking into a stream
@@ -21,16 +22,29 @@ from parquet_storage_query_spark.streaming.windows import (
     _local_dir_bytes,
     _run_to_memory,
     _state_partitions,
+    drain_stream,
 )
 
 
-def test_py4j_nodelay_patch_applied(spark):
+def test_py4j_nodelay_patch_applied(spark, tmp_path):
     # the class patch marks the wrapped methods; assert it took
     from py4j.clientserver import ClientServerConnection
 
-    assert getattr(
-        ClientServerConnection.connect_to_java_server, "_nodelay_wrapped", False
-    ), "py4j NODELAY class patch missing (py4j upgrade renamed the method?)"
+    for method in ("connect_to_java_server", "init_socket_from_python_server"):
+        assert getattr(
+            getattr(ClientServerConnection, method), "_nodelay_wrapped", False
+        ), f"py4j NODELAY class patch missing on {method} (py4j upgrade renamed it?)"
+    # a foreachBatch function calls the JVM over the connection the JVM
+    # opened to Python; that connection then joins the pool checked below
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    counts = []
+    drain_stream(
+        spark.readStream.schema("id long")
+        .parquet(src)
+        .writeStream.foreachBatch(lambda batch, _id: counts.append(batch.count()))
+    )
+    assert sum(counts) == 3
     # and the live gateway's sockets actually carry the option
     gw = spark.sparkContext._gateway
     conns = list(getattr(gw._gateway_client, "deque", []))

@@ -1,6 +1,6 @@
-"""Profile streaming queries: wrap streaming.windows._run_to_memory to
-capture every StreamingQueryProgress (durationMs breakdown + state-store
-metrics) while running the registered query end-to-end.
+"""Profile streaming queries: capture every StreamingQueryProgress
+(durationMs breakdown + state-store metrics) of each stream the registered
+query runs end-to-end, read from the query just before it stops.
 
 Usage: python tools/profile_streaming.py <sf_dir> <query> [query ...]
        [--conf k=v ...]   extra session conf (e.g. RocksDB provider A/B)
@@ -49,10 +49,8 @@ def main() -> None:
     atexit.register(lambda: shutil.rmtree(idx, ignore_errors=True))
 
     from parquet_storage_query_spark.session import get_spark
-    from parquet_storage_query_spark.streaming import windows as W
 
     progresses: list[dict] = []
-    orig = W._run_to_memory
 
     import pyspark.sql.streaming.query as _sq
 
@@ -67,14 +65,6 @@ def main() -> None:
         return _orig_stop(self)
 
     _sq.StreamingQuery.stop = _capturing_stop
-
-    def wrapped(df, name, mode, partitions=None):
-        return orig(df, name, mode, partitions)
-
-    W._run_to_memory = wrapped
-    # some operators import _run_to_memory by name at call time via
-    # `from .windows import _run_to_memory` INSIDE the function body, so
-    # patching the module attribute covers them all.
 
     spark = get_spark("profile_streaming", extra_conf=confs or None)
     qs = all_queries()
